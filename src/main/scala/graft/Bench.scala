@@ -222,8 +222,18 @@ object Bench {
     // ones. Cold, single-shot numbers at sub-second query times
     // measure mostly compiler latency and host scheduling noise; warm
     // best-of-N measures the execution plan.
-    selected.foreach { case (_, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+    // Every failure, warmup or timed, is printed and names its gate in
+    // the summary's "failed" list; any failure exits non-zero.
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def attempt(name: String, phase: String)(body: => Unit): Boolean =
+      try { body; true } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed ($phase): $e")
+          failed += name
+          false
+      }
+    selected.foreach { case (name, fn) =>
+      attempt(name, "warmup")(fn(spark, sfDir).count())
     }
     System.gc()
     // Clamped to >= 1 (0/negative/garbage would crash times.min below);
@@ -231,15 +241,14 @@ object Bench {
     // fast-failing query can never masquerade as fast.
     val timedReps = math.max(1, sys.env.get("SPARK_GRAFT_REPS")
       .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(2))
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+    def timeOnce(name: String): Option[Double] = {
       val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).count()
+      if (attempt(name, "timed")(SparkEntry.queries(name)(spark, sfDir).count()))
         Some((System.nanoTime() - t0) / 1e9)
-      } catch { case _: Throwable => None }
+      else None
     }
-    val repTimes = selected.map { case (name, fn) =>
-      val times = (1 to timedReps).flatMap(_ => timeOnce(fn))
+    val repTimes = selected.map { case (name, _) =>
+      val times = (1 to timedReps).flatMap(_ => timeOnce(name))
       // Nudge the driver GC so ContextCleaner can release broadcasts and
       // localCheckpoint blocks from this query before the next one runs:
       // with a large heap the JVM may otherwise not collect for the whole
@@ -259,7 +268,7 @@ object Bench {
     val allTimes = repTimes.map { case (name, ts) =>
       if (ts.isEmpty || !slow10(name)) name -> ts
       else {
-        val extra = timeOnce(SparkEntry.queries(name))
+        val extra = timeOnce(name)
         System.gc()
         name -> (ts ++ extra)
       }
@@ -304,7 +313,10 @@ object Bench {
         outOfBand(sentinelReadEndSec, ReadRef) ||
         bracketsDisagree(sentinelSec, sentinelEndSec, WriteRef) ||
         bracketsDisagree(sentinelReadSec, sentinelReadEndSec, ReadRef)
-    val total = tightened.values.filter(_ >= 0).sum
+    // A failed gate has no comparable time, so neither has the suite:
+    // the total is -1 and "failed" names the gates.
+    val total = if (failed.isEmpty) tightened.values.sum else -1.0
+    val failedJson = failed.toSeq.sorted.map(n => s"\"$n\"").mkString("[", ",", "]")
     def fmt(v: Double): String =
       if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     // Full per-query detail goes to a file; stdout gets ONE compact JSON
@@ -354,7 +366,7 @@ object Bench {
       }.mkString("{", ",", "}")
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_detail.json"),
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"$timing","jitter":"$jitter","spread":$spreadJson,"sentinel_store_write_sec":${fmt(sentinelSec)},"sentinel_store_read_sec":${fmt(sentinelReadSec)},"sentinel_store_write_end_sec":${fmt(sentinelEndSec)},"sentinel_store_read_end_sec":${fmt(sentinelReadEndSec)},"drift_flagged":$driftFlagged,$jvmDiag,"queries":$detail,"reps":$repsDetail,"sf":"$sfDir"}""".getBytes("UTF-8"))
+        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"$timing","jitter":"$jitter","spread":$spreadJson,"sentinel_store_write_sec":${fmt(sentinelSec)},"sentinel_store_read_sec":${fmt(sentinelReadSec)},"sentinel_store_write_end_sec":${fmt(sentinelEndSec)},"sentinel_store_read_end_sec":${fmt(sentinelReadEndSec)},"drift_flagged":$driftFlagged,"failed":$failedJson,$jvmDiag,"queries":$detail,"reps":$repsDetail,"sf":"$sfDir"}""".getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     val budget = 1600
     // "detail" names the committed file carrying ALL per-query rows +
@@ -362,7 +374,7 @@ object Bench {
     // the harness's ~2000-char stdout retention — an overflowed line is
     // never parsed at all, observed r04); independent per-query audits
     // read bench_detail.json, which is committed every round.
-    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"$timing","jitter":"$jitter","spread":$spreadJson,"sentinel_store_write_sec":${fmt(sentinelSec)},"sentinel_store_read_sec":${fmt(sentinelReadSec)},"sentinel_store_write_end_sec":${fmt(sentinelEndSec)},"sentinel_store_read_end_sec":${fmt(sentinelReadEndSec)},"drift_flagged":$driftFlagged,"n":${tightened.size},"detail":"bench_detail.json","sf":"$sfDir","""
+    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","timing":"$timing","jitter":"$jitter","spread":$spreadJson,"sentinel_store_write_sec":${fmt(sentinelSec)},"sentinel_store_read_sec":${fmt(sentinelReadSec)},"sentinel_store_write_end_sec":${fmt(sentinelEndSec)},"sentinel_store_read_end_sec":${fmt(sentinelReadEndSec)},"drift_flagged":$driftFlagged,"failed":$failedJson,"n":${tightened.size},"detail":"bench_detail.json","sf":"$sfDir","""
     var used = head.length + 40 // room for closing braces + elided field
     val kept = allEntries.takeWhile { e => used += e.length + 1; used <= budget }
     val elided = allEntries.size - kept.size
@@ -380,5 +392,10 @@ object Bench {
     catch { case _: Throwable => () }
     println(summaryLine)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} failed gate(s): " +
+        failed.toSeq.sorted.mkString(" "))
+      sys.exit(1)
+    }
   }
 }

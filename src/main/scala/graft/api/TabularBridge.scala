@@ -142,16 +142,20 @@ object TabularBridge {
     // cell struct is <= 8 bytes flat index + 8 bytes per variable, so a
     // conforming chunk's buffer stays well under the row limit. Guard it
     // explicitly so an oversized chunk spec fails at PLAN time with a
-    // real message instead of a mid-shuffle buffer-growth error.
+    // real message instead of a mid-shuffle buffer-growth error. The
+    // products saturate at Long.MaxValue: a wrapped one could pass.
     locally {
-      val cells = dims.map { case (d, size) =>
-        math.min(normalized(d).toLong, size) }.product
+      def mul(a: Long, b: Long): Long =
+        try math.multiplyExact(a, b)
+        catch { case _: ArithmeticException => Long.MaxValue }
+      val cells = dims.map { case (d, size) => math.min(normalized(d).toLong, size) }
+        .foldLeft(1L)(mul)
       val bytesPerCell = 8L * (1 + vars.length)
-      require(cells * bytesPerCell <= (1L << 31) - 16,
+      require(mul(cells, bytesPerCell) <= (1L << 31) - 16,
         s"fromDataFrame chunk ${normalized} holds $cells cells x " +
-          s"$bytesPerCell B = ${cells * bytesPerCell} B per assembly " +
-          "buffer — beyond the 2 GB single-row aggregation limit (and the " +
-          "2 GB chunk contract); use smaller chunks")
+          s"$bytesPerCell B per assembly buffer — beyond the 2 GB " +
+          "single-row aggregation limit (and the 2 GB chunk contract); " +
+          "use smaller chunks")
     }
     val grouped = df.select(
         expr(chunkIdxSql).as("__ck"),

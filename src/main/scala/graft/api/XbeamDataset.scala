@@ -411,14 +411,6 @@ final class XbeamDataset private (
 
   // ------------------------------------------------------------ rechunk
 
-  /** Adjust chunking (dataset.py:968-1038). Fast paths from the
-    * reference: no-op when chunks match (rechunk.py:568-571) and
-    * rechunk-as-re-read on an untransformed scan when the new chunks
-    * are whole multiples of the stored ones (dataset.py:1010-1019) —
-    * the scan's region reads simply span more blocks, zero shuffles.
-    * Otherwise: split vars first ("smaller itemsize allows much more
-    * flexibility", dataset.py:1022-1024), run the memory-bounded
-    * multi-stage Rechunk, and re-consolidate vars. */
   /** Byte-target rechunk (`chunks="200MB"`, dataset.py:98-108): every
     * dim re-chunked so whole chunks land near the byte budget, sized
     * against the combined itemsize and snapped to multiples of the
@@ -441,28 +433,50 @@ final class XbeamDataset private (
       template.combinedItemsize(splitVars), default,
       previousChunks = chunkSizes), maxMem)
 
+  /** Adjust chunking (dataset.py:968-1038). No-op when chunks match
+    * (rechunk.py:568-571). On an untransformed scan whose new chunks are
+    * whole multiples of the current ones (or the full dim) the rechunk is
+    * a re-read (dataset.py:1010-1019): the scan's region reads span more
+    * blocks, zero shuffles. Otherwise the memory-bounded multi-stage
+    * Rechunk runs on per-variable chunks ("smaller itemsize allows much
+    * more flexibility", dataset.py:1022-1024), with two departures from
+    * the reference's stage-per-GroupByKey chain:
+    *  - on a scan, the source→read edge stage is the same re-read when
+    *    the plan's read chunks are re-readable, so its shuffle goes;
+    *  - the last consolidating stage merges the variables back in the
+    *    same pass, so ConsolidateVariables needs no shuffle of its own
+    *    (a chain that only splits never splits the variables at all).
+    * A pancake→pencil rechunk planned in 2 stages thus shuffles twice. */
   def rechunk(newChunks: Map[String, Int],
               maxMem: Long = 1L << 30): XbeamDataset = {
     val target = ChunkGrid.normalizeChunks(
       chunkSizes ++ newChunks, template.dimSizes)
     if (target == chunkSizes) return this
-    val rereadOk = scan.isDefined && template.dimOrder.forall { d =>
-      target(d) % chunkSizes(d) == 0 || target(d) == template.dimSizes(d)
-    }
-    if (rereadOk)
+    if (rereadable(target))
       return withScan(template, target, splitVars, scan.get)
-    val itemsize = template.combinedItemsize(splitVars)
-    val wasSplit = splitVars
-    val split =
-      if (wasSplit) chunkDataset
-      else chunkDataset.flatMap { p: Pair => ChunkOps.splitVariables(p._1, p._2) }
-    val (rechunked, _) = ChunkTransforms.rechunk(split, template.dimOrder,
-      template.dimSizes, chunkSizes, target, itemsize, maxMem = maxMem)
-    val out =
-      if (wasSplit) rechunked
-      else ChunkTransforms.consolidateVariables(rechunked)
-    withPlan(template, target, wasSplit, out)
+    val stages = ChunkTransforms.rechunkStages(template.dimOrder,
+      template.dimSizes, chunkSizes, target,
+      template.combinedItemsize(splitVars), maxMem = maxMem)
+    val (input, rest) =
+      if (rereadable(stages.head._2))
+        (withScan(template, stages.head._2, splitVars, scan.get), stages.tail)
+      else (this, stages)
+    val merge = !splitVars &&
+      rest.exists { case (in, tgt) => ChunkTransforms.consolidates(in, tgt) }
+    val pieces =
+      if (merge) ChunkTransforms.splitVariables(input.chunkDataset)
+      else input.chunkDataset
+    withPlan(template, target, splitVars,
+      ChunkTransforms.rechunk(pieces, rest, template.dimSizes,
+        template.nbytes, template.vars.size, merge))
   }
+
+  /** Whether this is a scan that can read `chunks` directly: each is a
+    * whole multiple of the current chunk or spans its full dim. */
+  private def rereadable(chunks: Map[String, Int]): Boolean =
+    scan.isDefined && template.dimOrder.forall { d =>
+      chunks(d) % chunkSizes(d) == 0 || chunks(d) == template.dimSizes(d)
+    }
 
   // --------------------------------------------------------------- mean
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
-import graft.core.{ArrayChunk, ChunkKey, VarArray}
+import graft.core.{ArrayChunk, ChunkGrid, ChunkKey, VarArray}
 import graft.ndarray.{DType, NdArray}
 
 /** Spark transforms over a distributed chunked dataset
@@ -12,10 +12,12 @@ import graft.ndarray.{DType, NdArray}
   * Chunk payloads are opaque tensors, so pairs travel Kryo-encoded;
   * shuffle keys are the deterministic canonical key strings (mirroring
   * the reference's deterministic KeyCoder, core.py:250-265). Shuffles
-  * appear exactly where the reference has GroupByKey: consolidate and
-  * per-key mean. Split is a narrow flatMap. Map-side partial aggregation
-  * for mean comes from reduceGroups (Spark plans partial_reduce before
-  * the exchange), replacing the reference's hand-built fanout schedule
+  * sit where the reference has GroupByKey (consolidate, per-key mean),
+  * with one exception: a rechunk merges its variables in its last
+  * consolidate, so ConsolidateVariables costs no shuffle of its own
+  * there. Split is a narrow flatMap. Map-side partial aggregation for
+  * mean comes from reduceGroups (Spark plans partial_reduce before the
+  * exchange), replacing the reference's hand-built fanout schedule
   * (combiners.py:219-291).
   */
 object ChunkTransforms {
@@ -430,40 +432,114 @@ object ChunkTransforms {
         ChunkOps.consolidateVariables(it.toSeq)
       }
 
-  /** One split-then-consolidate pass with the reference's elision rules
-    * (RechunkStage, rechunk.py:503-517): skip split when target divides
-    * source per dim, skip consolidate when source divides target. */
-  def rechunkStage(ds: Dataset[Pair], source: Map[String, Int],
-                   target: Map[String, Int]): Dataset[Pair] = {
-    val dims = source.keys.toSeq
-    var out = ds
-    if (dims.exists(d => target(d) % source(d) != 0))
-      out = splitChunks(out, target)
-    if (dims.exists(d => source(d) % target(d) != 0))
-      out = consolidateChunks(out, target)
-    out
-  }
-
-  /** Multi-stage memory-bounded rechunk (Rechunk, rechunk.py:521-605):
-    * plan via RechunkPlanner, then one rechunkStage per planned stage,
-    * with the source→read and write→target edge stages prepended/
-    * appended. Returns (result, stage chunk list) for logging/tests. */
-  def rechunk(ds: Dataset[Pair], dimOrder: Seq[String], dimSizes: Map[String, Long],
-              sourceChunks: Map[String, Int], targetChunks: Map[String, Int],
-              itemsize: Long, minMem: Long = -1, maxMem: Long = 1L << 30): (Dataset[Pair], Seq[(Map[String, Int], Map[String, Int])]) = {
-    val minM = if (minMem < 0) maxMem / 100 else minMem
+  /** The stage chain of a memory-bounded rechunk (Rechunk,
+    * rechunk.py:521-605): RechunkPlanner's (read, write) stages with the
+    * source→read and write→target edge stages prepended/appended
+    * (rechunk.py:581-585). Each pair is one [[rechunkStage]]. */
+  def rechunkStages(dimOrder: Seq[String], dimSizes: Map[String, Long],
+                    sourceChunks: Map[String, Int], targetChunks: Map[String, Int],
+                    itemsize: Long, minMem: Long = -1,
+                    maxMem: Long = 1L << 30): Seq[(Map[String, Int], Map[String, Int])] = {
     require(sourceChunks.keySet == targetChunks.keySet,
       s"source and target chunks have different keys: $sourceChunks vs $targetChunks")
-    if (sourceChunks == targetChunks) return (ds, Nil) // no-op (rechunk.py:568-571)
+    val minM = if (minMem < 0) maxMem / 100 else minMem
     val plan = RechunkPlanner.planForDims(dimOrder, dimSizes, sourceChunks,
       targetChunks, itemsize, minM, maxMem)
-    // edge stages (rechunk.py:581-585)
     val full = ((sourceChunks, sourceChunks, plan.head._1) +: plan) :+
       ((plan.last._3, targetChunks, targetChunks))
-    val stages = full.map(s => (s._1, s._3))
-    var out = ds
-    stages.foreach { case (in, tgt) => out = rechunkStage(out, in, tgt) }
-    (out, stages)
+    full.map(s => (s._1, s._3))
+  }
+
+  /** Whether a stage assembles chunks, i.e. some source chunk does not
+    * split evenly into target chunks (rechunk.py:515-516). */
+  def consolidates(source: Map[String, Int], target: Map[String, Int]): Boolean =
+    source.keys.exists(d => source(d) % target(d) != 0)
+
+  /** Partition count of a rechunk consolidate: one per advisory-sized
+    * slice of the data but no fewer than the cores, and no more than the
+    * stage's target groups (a partition without a group is a task
+    * without work). `groups` is known at plan time; the two session
+    * values are only read. */
+  private def consolidatePartitions(spark: SparkSession, groups: Long, bytes: Long): Int = {
+    val advisory = spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val byBytes = (bytes + advisory - 1) / advisory
+    math.max(1L, math.min(groups,
+      math.max(spark.sparkContext.defaultParallelism.toLong, byBytes))).toInt
+  }
+
+  /** The consolidate of a rechunk stage (ConsolidateChunks,
+    * rechunk.py:311-336): shuffle on the rounded target key into exactly
+    * `partitions` partitions, sort on the key inside each, and assemble
+    * each run of equal keys. An explicit count is one AQE does not
+    * coalesce; left to it, a ~100 MB exchange packs into 2 partitions of
+    * its 64 MB advisory size and half of 4 cores idle. With `mergeVars`
+    * the key drops the variable names, so one group holds every
+    * variable's pieces of a target chunk and ConsolidateVariables
+    * (rechunk.py:340-371) runs in the same pass, not behind a shuffle of
+    * its own. */
+  private def rechunkConsolidate(ds: Dataset[Pair], target: Map[String, Int],
+                                 partitions: Int, mergeVars: Boolean): Dataset[Pair] = {
+    import org.apache.spark.sql.functions.col
+    ds.map { p: Pair =>
+      val k = ChunkOps.roundChunkKey(p._1, target)
+      ((if (mergeVars) k.copy(vars = None) else k).canonical, p)
+    }(Encoders.tuple(Encoders.STRING, pairEnc))
+      .repartition(partitions, col("_1"))
+      .sortWithinPartitions(col("_1"))
+      .mapPartitions { rows: Iterator[(String, Pair)] =>
+        val it = rows.buffered
+        new Iterator[Pair] {
+          def hasNext: Boolean = it.hasNext
+          def next(): Pair = {
+            val key = it.head._1
+            val group = Seq.newBuilder[Pair]
+            while (it.hasNext && it.head._1 == key) group += it.next()._2
+            val results = ChunkOps.consolidateChunks(group.result())
+            if (mergeVars) ChunkOps.consolidateVariables(results)
+            else {
+              require(results.length == 1,
+                s"grouped consolidation produced ${results.length} var groups")
+              results.head
+            }
+          }
+        }
+      }(pairEnc)
+  }
+
+  /** One split-then-consolidate pass with the reference's elision rules
+    * (RechunkStage, rechunk.py:503-517): skip split when target divides
+    * source per dim, skip consolidate when source divides target.
+    * `mergeVars` merges the variables in the consolidate. */
+  def rechunkStage(ds: Dataset[Pair], source: Map[String, Int],
+                   target: Map[String, Int], partitions: Int,
+                   mergeVars: Boolean = false): Dataset[Pair] = {
+    val split =
+      if (source.keys.exists(d => target(d) % source(d) != 0)) splitChunks(ds, target)
+      else ds
+    if (consolidates(source, target))
+      rechunkConsolidate(split, target, partitions, mergeVars)
+    else split
+  }
+
+  /** Run a rechunk stage chain (from [[rechunkStages]]) over chunks of
+    * `bytes` in total, keyed per variable for `vars` variables, on a
+    * grid of `dimSizes`. With `mergeVars` the last consolidating stage
+    * merges the variables back into vars = None chunks. */
+  def rechunk(ds: Dataset[Pair], stages: Seq[(Map[String, Int], Map[String, Int])],
+              dimSizes: Map[String, Long], bytes: Long, vars: Int,
+              mergeVars: Boolean = false): Dataset[Pair] = {
+    val lastConsolidate =
+      if (mergeVars) stages.lastIndexWhere { case (in, tgt) => consolidates(in, tgt) }
+      else -1
+    require(!mergeVars || lastConsolidate >= 0,
+      "merging variables needs a consolidating stage")
+    stages.zipWithIndex.foldLeft(ds) { case (out, ((in, tgt), i)) =>
+      val merge = i == lastConsolidate
+      val groups = ChunkGrid.totalChunks(tgt, dimSizes) * (if (merge) 1 else vars)
+      rechunkStage(out, in, tgt,
+        consolidatePartitions(ds.sparkSession, groups, bytes), merge)
+    }
   }
 
   // ------------------------------------------------------------------ mean

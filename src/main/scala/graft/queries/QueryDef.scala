@@ -246,13 +246,17 @@ object Tables {
     * sortBeforeRepartition is on). At scale the scan already has >=
     * cores splits and this is a no-op branch. Use for CPU-dense passes
     * (hashing, regex, per-element array math), NOT for scans whose
-    * cost is the bytes themselves. */
-  def tPar(spark: SparkSession, dir: String, name: String): DataFrame =
+    * cost is the bytes themselves. The plain table is loaded before
+    * the `#par` entry is computed: loading it inside would nest a
+    * `computeIfAbsent` on the same map, which throws "Recursive update"
+    * whenever the two keys share a hash bin. */
+  def tPar(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val df = t(spark, dir, name)
     cachedKey(spark, tsKey(s"$dir/$name.parquet") + "#par") {
-      val df = t(spark, dir, name)
       val p = spark.sparkContext.defaultParallelism
       if (df.rdd.getNumPartitions >= p) df else df.repartition(p)
     }
+  }
 
   /** Row count of an immutable input table, memoized per file vintage —
     * plan-time metadata (the XbeamQueries.nRows idiom, centralized):

@@ -1900,6 +1900,16 @@ class XbeamDatasetSpec extends AnyFunSuite {
     assert(out == big, s"int64 values corrupted: $out")
   }
 
+  test("tabular bridge guard rejects a chunk whose cell count overflows Long") {
+    import spark.implicits._
+    val df = Seq((0L, 0L, 0L, 0L, 1.0)).toDF("a", "b", "c", "d", "v")
+    // four full 2^16 dims: 2^64 cells, which wraps to 0 in a Long product
+    val dims = Seq("a", "b", "c", "d").map(_ -> 65536L)
+    val e = intercept[IllegalArgumentException](TabularBridge.fromDataFrame(df,
+      spark, dims, Seq("v" -> DType.F64), dims.map(d => d._1 -> 65536).toMap))
+    assert(e.getMessage.contains("2 GB"), e.getMessage)
+  }
+
   test("corr/cov match hand computation; NaN pairs drop under skipna") {
     // x = [1,2,3,4], y = [2,4,6,8]: perfectly correlated → corr 1,
     // cov (ddof=1) = Σ(x-x̄)(y-ȳ)/3 = (4.5+0.5+0.5+4.5... ) = 10/3

@@ -37,10 +37,11 @@ class ChunkTransformsSpec extends AnyFunSuite {
       ArrayChunk(Map("v" -> VarArray(Seq("t", "x"), src))),
       Map("t" -> 3, "x" -> 7))
     val ds = spark.createDataset(input)
-    val (out, stages) = ChunkTransforms.rechunk(ds, Seq("t", "x"),
-      Map("t" -> 17L, "x" -> 7L), Map("t" -> 3, "x" -> 7),
-      Map("t" -> 17, "x" -> 2), itemsize = 8,
+    val dimSizes = Map("t" -> 17L, "x" -> 7L)
+    val stages = ChunkTransforms.rechunkStages(Seq("t", "x"), dimSizes,
+      Map("t" -> 3, "x" -> 7), Map("t" -> 17, "x" -> 2), itemsize = 8,
       minMem = 8, maxMem = 1L << 20)
+    val out = ChunkTransforms.rechunk(ds, stages, dimSizes, src.nbytes, vars = 1)
     val back = ChunkOps.consolidateChunks(out.collect().toSeq)
     assert(back.head._2.vars("v").arr.sameAs(src))
     assert(stages.nonEmpty)

@@ -33,7 +33,7 @@ class RechunkMemorySpec extends AnyFunSuite {
       ArrayChunk(Map("v" -> VarArray(Seq("t", "x"), src))), srcChunks)
     val ds = spark.createDataset(input)(pairEnc)
 
-    val (_, stages) = ChunkTransforms.rechunk(ds, Seq("t", "x"),
+    val stages = ChunkTransforms.rechunkStages(Seq("t", "x"),
       Map("t" -> nt.toLong, "x" -> nx.toLong), srcChunks, tgtChunks,
       itemsize = 8, minMem = 8L * 1024, maxMem = maxMem)
     // the bound must be doing real work: more than the two edge stages
@@ -45,7 +45,7 @@ class RechunkMemorySpec extends AnyFunSuite {
     var cur = ds
     var peak = 0L
     val perStage = stages.map { case (in, tgt) =>
-      cur = ChunkTransforms.rechunkStage(cur, in, tgt)
+      cur = ChunkTransforms.rechunkStage(cur, in, tgt, partitions = 4)
       val p = cur.map { pair: (ChunkKey, ArrayChunk) => pair._2.nbytes }
         .reduce((a: Long, b: Long) => math.max(a, b))
       peak = math.max(peak, p)

@@ -636,4 +636,44 @@ class PlanShapeSpec extends AnyFunSuite {
     assert("Exchange".r.findAllIn(ip).length == 1,
       s"nearest interp must gather in exactly one shuffle:\n$ip")
   }
+
+  test("zarr-scan pancake->pencil rechunk in 2 stages shuffles twice") {
+    import graft.api.XbeamDataset
+    import graft.ndarray.{DType, NdArray}
+    import graft.operators.ChunkTransforms
+    val (nt, nl, nx) = (120, 36, 72)
+    val names = Seq("time", "lat", "lon")
+    val vals = Seq("a", "b").zipWithIndex.map { case (n, v) =>
+      n -> (names, NdArray.fromDoubles(DType.F32, Array(nt, nl, nx),
+        Array.tabulate(nt * nl * nx)(i => (i * 7 + v) % 101 / 8.0)))
+    }.toMap
+    val path = java.nio.file.Files.createTempDirectory("pencil").toString + "/store"
+    XbeamDataset.fromLocal(spark, vals, chunks = Map("time" -> 2)).toZarr(path)
+    val src = XbeamDataset.fromZarr(spark, path)
+    val target = Map("time" -> nt, "lat" -> 4, "lon" -> 6)
+    // the largest memory bound on a geometric ladder that still plans
+    // two stages (plus the two edge stages)
+    val floor = 8L * nl * nx * 2
+    val maxMem = Iterator.iterate(floor)(_ * 5 / 4).takeWhile(_ < floor * 64)
+      .filter { m =>
+        ChunkTransforms.rechunkStages(names, src.template.dimSizes,
+          src.chunkSizes, target, itemsize = 8, maxMem = m).size == 4
+      }.toSeq.last
+    val re = src.rechunk(target, maxMem)
+    val plan = re.chunkDataset.queryExecution.executedPlan.toString
+    // the first stage re-reads the store; the last consolidate merges the
+    // variables: one exchange per planned stage, none for the edges or
+    // for ConsolidateVariables
+    assert("(?<!Reused)Exchange".r.findAllIn(plan).size == 2,
+      s"a 2-stage rechunk must shuffle exactly twice:\n$plan")
+    val pairs = re.chunkDataset.collect()
+    assert(pairs.length == 9 * 12 && pairs.forall(_._1.vars.isEmpty))
+    pairs.foreach { case (k, c) =>
+      vals.foreach { case (n, (_, arr)) =>
+        val want = arr.slice(Array(0, k.offsets("lat").toInt, k.offsets("lon").toInt),
+          Array(nt, 4, 6))
+        assert(c.vars(n).arr.sameAs(want), s"$n at $k")
+      }
+    }
+  }
 }
