@@ -3106,8 +3106,9 @@ object XbeamQueries {
         // parquet sink (each epoch overwrites `latest`; last wins) —
         // the same production sink shape as s01–s06/s11, retiring the
         // demo-only memory sink this gate last used
-        graft.streaming.StreamOps.runToFileSink(s, "s08", "complete") {
-          val stream = s.readStream.format("zarr")
+        graft.streaming.StreamOps.runToFileSink(s, "s08",
+            graft.streaming.StreamOps.inputBytes(store), "complete") { ss =>
+          val stream = ss.readStream.format("zarr")
             .option("maxChunksPerTrigger", perTrigger).load(store)
           stream.groupBy(col("x"))
             .agg(count(lit(1)).as("n"),

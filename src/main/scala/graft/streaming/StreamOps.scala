@@ -2,10 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.graftshim.SessionBridge
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types._
-
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.queries.QueryDef
 
@@ -39,17 +39,6 @@ final case class DedupOut(fp: String, survivor_id: Long, n_dups: Long,
   */
 object StreamOps {
 
-  /** events as a stream with `ts` normalized to a session-UTC
-    * TIMESTAMP. readStream needs the schema up front, and the builder
-    * has shipped `ts` as both TIMESTAMP(NANOS) (loads as BIGINT) and
-    * timestamp[us] (loads as TIMESTAMP_NTZ) across vintages — so probe
-    * the batch footer first and declare `ts` as whatever it actually
-    * is, then convert with the same shared rule as the batch path
-    * (Tables.normalizeTs). Declaring a wrong type here is SILENT
-    * corruption (r11: LongType over a micros file read raw micros as
-    * nanos and 4 of 5 stream gates returned wrong rows) — the batch
-    * loadEvents call also runs the once-per-path epoch sanity check so
-    * drift fails loudly before any stream starts. */
   /** Hour-axis template bounds of the events table — (h0us, hours) —
     * memoized per file VINTAGE (path + size + mtime, the same key as
     * the loader caches): plan-time template metadata that s07/s09/s10
@@ -70,7 +59,21 @@ object StreamOps {
         (h0us, (b.getLong(1) - h0us) / 3600000000L + 1)
       })
 
-  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
+  /** events as a stream with `ts` normalized to a session-UTC
+    * TIMESTAMP. readStream needs the schema up front, and the table data
+    * has shipped `ts` as both TIMESTAMP(NANOS) (loads as BIGINT) and
+    * timestamp[us] (loads as TIMESTAMP_NTZ) across vintages — so probe
+    * the batch footer first and declare `ts` as whatever it actually
+    * is, then convert with the same shared rule as the batch path
+    * (Tables.normalizeTs). Declaring a wrong type here is SILENT
+    * corruption (r11: LongType over a micros file read raw micros as
+    * nanos and 4 of 5 stream gates returned wrong rows) — the batch
+    * loadEvents call also runs the once-per-path epoch sanity check so
+    * drift fails loudly before any stream starts. The probe and the
+    * check run here, on the caller's session and before its stream
+    * session is cloned; the returned function builds the stream on the
+    * session it is given. */
+  private def eventsStream(s: SparkSession, dir: String): SparkSession => DataFrame = {
     val path = s"$dir/events.parquet"
     val rawType = graft.queries.Tables.eventsTsType(s, path)
     graft.queries.Tables.loadEvents(s, path) // epoch sanity check (memoized)
@@ -81,10 +84,125 @@ object StreamOps {
       StructField("event_type", StringType),
       StructField("value", DoubleType),
       StructField("props", StringType)))
-    val raw = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    graft.queries.Tables.normalizeTs(s, raw, rawType, path)
+    ss => graft.queries.Tables.normalizeTs(ss,
+      ss.readStream.schema(schema).option("pathGlobFilter", "events.parquet")
+        .parquet(dir), rawType, path)
+  }
+
+  /** Bytes on disk under `path` (a file or a directory tree): the input
+    * size a stream's state partitions are sized from. */
+  private[graft] def inputBytes(path: String): Long = {
+    val root = java.nio.file.Paths.get(path)
+    if (!java.nio.file.Files.exists(root)) 0L
+    else {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.filter(java.nio.file.Files.isRegularFile(_))
+        .mapToLong(java.nio.file.Files.size(_)).sum()
+      finally walk.close()
+    }
+  }
+
+  /** The session a bounded stream runs on: a clone of the caller's `s`
+    * (its runtime confs, temp views, functions and QueryExecutionListeners)
+    * that carries the run's own settings, so the stream path never writes
+    * a conf of the caller's session (a flip-and-restore there races with
+    * any concurrent query on it).
+    *
+    *  - State partitions (`spark.sql.shuffle.partitions`, fixed when the
+    *    fresh checkpoint is created): one per advisory-sized slice of the
+    *    input, at most the cores. Every state partition pays a store
+    *    commit per micro-batch — delta file, checksum file and a `chmod`
+    *    fork each — whatever it holds, and the key spaces here are
+    *    thousands of keys; s01 at sf0.01 ran 8 state tasks of 200-340 ms
+    *    wall (20-80 ms CPU) per batch. The two session values are only
+    *    read.
+    *  - `noDataBatch = false` skips the trailing zero-row micro-batch that
+    *    AvailableNow otherwise runs to advance the watermark. ONLY legal
+    *    when that batch can emit nothing (see s05 and s10).
+    *  - Artifact isolation off, unless the caller's session holds
+    *    session-scoped artifacts. Each stream runs on its own clone of
+    *    this session; with isolation on, every clone's new session id
+    *    gets a new executor class loader, and the codegen cache (keyed on
+    *    loader + source) then compiled the same 18 classes on every s01
+    *    run. Without it the stream's tasks share the executor's default
+    *    loader with the caller's batch jobs.
+    *  - The caller's StreamingQueryListeners, so they still see the
+    *    stream, then a listener that unregisters the clone's listener bus
+    *    once the query has terminated (it delivers last, after the
+    *    caller's listeners).
+    *
+    * The session runs ONE stream: see [[runBounded]]. */
+  private def boundedStreamSession(s: SparkSession, inputBytes: Long,
+                                  noDataBatch: Boolean = true): SparkSession = {
+    val advisory = s.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val parts = math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong,
+      (inputBytes + advisory - 1) / advisory))
+    val ss = SessionBridge.cloneSession(s)
+    ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    if (!noDataBatch)
+      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    if (!SessionBridge.hasSessionArtifacts(s))
+      ss.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    s.streams.listListeners().foreach(ss.streams.addListener)
+    ss.streams.addListener(new BusRelease(ss))
+    ss
+  }
+
+  /** Unregisters its session's streaming listener bus after the query's
+    * terminate event was delivered to every listener before it. */
+  private final class BusRelease(ss: SparkSession) extends StreamingQueryListener {
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      release()
+    def release(): Unit = SessionBridge.detachStreamingBus(ss, this)
+  }
+
+  /** Run one bounded stream to completion on a [[boundedStreamSession]]:
+    * `start` gets that session and a fresh checkpoint directory and
+    * starts the query. Checkpoints go to tmpfs when available (the
+    * bounded run has no recovery story to preserve; a production job
+    * points this at durable storage) and are removed afterwards, also
+    * when the plan or start() throws. */
+  private[graft] def runBounded(s: SparkSession, prefix: String, inputBytes: Long,
+                                noDataBatch: Boolean = true)
+                               (start: (SparkSession, String) => StreamingQuery): Unit = {
+    val ss = boundedStreamSession(s, inputBytes, noDataBatch)
+    val ckpt = (if (java.nio.file.Files.isDirectory(
+        java.nio.file.Paths.get("/dev/shm"))) "/dev/shm/" else
+        System.getProperty("java.io.tmpdir") + "/") +
+      prefix + "_" + java.util.UUID.randomUUID.toString.replace("-", "") + "_ckpt"
+    var q: StreamingQuery = null
+    try {
+      q = start(ss, ckpt)
+      q.awaitTermination()
+    } finally {
+      // a query that never started posts no terminate event
+      if (q == null) ss.streams.listListeners().foreach {
+        case r: BusRelease => r.release()
+        case _ => ()
+      }
+      try graft.core.Fs.deleteRecursively(ckpt)
+      catch { case _: Throwable => () }
+    }
+  }
+
+  /** Pin the admission order of a stream's span files: one write job
+    * produces every `batchK.parquet` with the same mtime, and the file
+    * source admits files in mtime order (ties in an unspecified order),
+    * so give file k a strictly increasing mtime — the k-th micro-batch
+    * then reads span k. Fails loudly if the file system kept a tie. */
+  private def pinSpanOrder(files: Seq[java.nio.file.Path]): Unit = {
+    val base = System.currentTimeMillis() - 60000L
+    files.zipWithIndex.foreach { case (f, k) =>
+      java.nio.file.Files.setLastModifiedTime(f,
+        java.nio.file.attribute.FileTime.fromMillis(base + k * 2000L))
+    }
+    val mt = files.map(java.nio.file.Files.getLastModifiedTime(_).toMillis)
+    require(mt.zip(mt.drop(1)).forall { case (a, b) => a < b },
+      s"span file mtimes do not increase with the span index: " +
+        files.map(_.getFileName).zip(mt).mkString(", "))
   }
 
   /** Run a bounded stream to completion through `foreachBatch` into a
@@ -94,36 +212,27 @@ object StreamOps {
     * parquet is the production sink shape (each micro-batch appends
     * exactly the rows the mode finalizes; at 100 TB the same call
     * targets an object store or a table format), so no gate depends
-    * on the demo-only in-memory sink. Shuffle partitions drop to 8
-    * for the run — streaming state stores are per-shuffle-partition
-    * and the key spaces here are tiny, so fewer state partitions cut
-    * checkpoint IO ~4x — and are restored even when plan construction
-    * or start() throws (`build` is by-name and evaluated inside the
-    * try). Checkpoints go to tmpfs when available (the bounded run
-    * has no recovery story to preserve; a production job points this
-    * at durable storage) and are removed afterwards. */
-  /** `mode = "complete"` (the s08 shape — a complete-mode aggregate
+    * on the demo-only in-memory sink. `build` gets the stream's session
+    * (see [[runBounded]]; `inputBytes` sizes its state partitions) and
+    * returns the stream.
+    *
+    * `mode = "complete"` (the s08 shape — a complete-mode aggregate
     * finalizes the FULL result every micro-batch) writes each epoch
     * over the single `latest` directory so the last epoch wins —
     * idempotent under replay exactly like the append variant's
-    * per-batch dirs. This is what retires the demo-only memory sink. */
-  /** `noDataBatch = false` skips the trailing zero-row micro-batch that
-    * AvailableNow otherwise runs to advance the watermark. ONLY legal
-    * when that batch can emit nothing: a stream-stream INNER join (s05)
-    * emits on match during data batches and the finalize batch only
-    * evicts state. Append-mode window aggregations and event-time
-    * timeouts (s01/s02/s03/s04/s06) EMIT in that batch — they must keep
-    * it. Measured ~0.8-1.0 s of pure fixed cost per skipped batch. */
+    * per-batch dirs. This is what retires the demo-only memory sink.
+    *
+    * `noDataBatch = false` is for streams whose finalize batch emits
+    * nothing: a stream-stream INNER join (s05) emits on match during
+    * data batches and the finalize batch only evicts state. Append-mode
+    * window aggregations and event-time timeouts (s01/s02/s03/s04/s06)
+    * EMIT in that batch — they must keep it. Measured ~0.8-1.0 s of
+    * pure fixed cost per skipped batch. */
   private[graft] def runToFileSink(s: SparkSession, prefix: String,
+                                   inputBytes: Long,
                                    mode: String = "append",
                                    noDataBatch: Boolean = true)
-                                  (build: => DataFrame): DataFrame = {
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    val name = prefix + "_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val ckpt = (if (java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get("/dev/shm"))) "/dev/shm/" else
-        System.getProperty("java.io.tmpdir") + "/") + name + "_ckpt"
+                                  (build: SparkSession => DataFrame): DataFrame = {
     val sinkRoot = java.nio.file.Paths.get("target", "stream_sink")
       .toAbsolutePath
     // a rep of the same gate reclaims the previous rep's sink dir
@@ -139,31 +248,23 @@ object StreamOps {
           catch { case _: Throwable => () }
       }
     }
-    val out = sinkRoot.resolve(name).toString
+    val out = sinkRoot.resolve(
+      prefix + "_" + java.util.UUID.randomUUID.toString.replace("-", "")).toString
     var schema: StructType = null
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      if (!noDataBatch)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      val df = build
+    runBounded(s, prefix, inputBytes, noDataBatch) { (ss, ckpt) =>
+      val df = build(ss)
       schema = df.schema
       // one OVERWRITTEN directory per micro-batch: a retried/replayed
       // epoch rewrites its own b<id> path instead of appending a
       // duplicate copy, restoring the exactly-once reads the old
       // file-sink manifest gave (foreachBatch alone is at-least-once)
-      val q = df.writeStream
+      df.writeStream
         .foreachBatch { (bdf: DataFrame, batchId: Long) =>
           val dst = if (mode == "complete") s"$out/latest" else s"$out/b$batchId"
           bdf.write.mode("overwrite").parquet(dst)
         }
         .option("checkpointLocation", ckpt)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      try graft.core.Fs.deleteRecursively(ckpt)
-      catch { case _: Throwable => () }
     }
     // a run whose batches all finalized zero rows may never have
     // appended a file — surface the (legitimate) empty result rather
@@ -184,13 +285,13 @@ object StreamOps {
     QueryDef(
       "s01_stream_hourly_windows",
       (s, dir) => {
-        // streaming aggregation keeps one state store per shuffle
+        // streaming aggregation keeps one state store per state
         // partition per micro-batch; the window×type key space is tiny,
-        // so a handful of state partitions cuts checkpoint IO ~4x
-        // (state partitioning is fixed at stream start, independent of
-        // the batch setting we restore below)
-        runToFileSink(s, "s01_sink") {
-          val stream = eventsStream(s, dir)
+        // so the input-sized count (one partition below the advisory
+        // size) commits one store per batch instead of one per core
+        val events = eventsStream(s, dir)
+        runToFileSink(s, "s01_sink", inputBytes(s"$dir/events.parquet")) { ss =>
+          val stream = events(ss)
             .withWatermark("ts", "0 seconds")
             .groupBy(window(col("ts"), "1 hour"), col("event_type"))
             .agg(count(lit(1)).as("n_events"),
@@ -221,9 +322,10 @@ object StreamOps {
       "s02_stream_sessions",
       (s, dir) => {
         import s.implicits._
-        runToFileSink(s, "s02_sink") {
+        val events = eventsStream(s, dir)
+        runToFileSink(s, "s02_sink", inputBytes(s"$dir/events.parquet")) { ss =>
           val gapUs = 30L * 60 * 1000000
-          val stream = eventsStream(s, dir)
+          val stream = events(ss)
             .withWatermark("ts", "0 seconds")
             // the watermarked event-time column must flow into the
             // stateful operator for EventTimeTimeout to engage
@@ -297,8 +399,9 @@ object StreamOps {
     QueryDef(
       "s04_stream_sliding_windows",
       (s, dir) => {
-        runToFileSink(s, "s04_sink") {
-          val stream = eventsStream(s, dir)
+        val events = eventsStream(s, dir)
+        runToFileSink(s, "s04_sink", inputBytes(s"$dir/events.parquet")) { ss =>
+          val stream = events(ss)
             .withWatermark("ts", "0 seconds")
             .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
             .agg(count(lit(1)).as("n_events"))
@@ -333,8 +436,10 @@ object StreamOps {
         // inner join: every result row is emitted by the data batch that
         // completes its match; the no-data finalize batch only evicts
         // state and emitted nothing (probed: 0 rows, ~1.0 s) — skip it
-        runToFileSink(s, "s05_sink", noDataBatch = false) {
-          def side(tag: String, typ: String) = eventsStream(s, dir)
+        val events = eventsStream(s, dir)
+        runToFileSink(s, "s05_sink", inputBytes(s"$dir/events.parquet"),
+            noDataBatch = false) { ss =>
+          def side(tag: String, typ: String) = events(ss)
             .filter(col("event_type") === typ)
             .select(col("event_id").as(s"${tag}_id"),
                     col("user_id").as(s"${tag}_user"), col("ts").as(s"${tag}_ts"))
@@ -373,7 +478,7 @@ object StreamOps {
       "s03_stream_dedup",
       (s, dir) => {
         import s.implicits._
-        runToFileSink(s, "s03_sink") {
+        runToFileSink(s, "s03_sink", inputBytes(s"$dir/documents.parquet")) { ss =>
           val horizonMs = 20000L
           val docsSchema = StructType(Seq(
             StructField("doc_id", LongType),
@@ -381,7 +486,7 @@ object StreamOps {
             StructField("lang", StringType),
             StructField("source", StringType),
             StructField("n_chars", LongType)))
-          val stream = s.readStream.schema(docsSchema)
+          val stream = ss.readStream.schema(docsSchema)
             .option("pathGlobFilter", "documents.parquet")
             .parquet(dir)
             // +1 day keeps the first doc's event time off the initial
@@ -437,10 +542,11 @@ object StreamOps {
     QueryDef(
       "s06_stream_static_join",
       (s, dir) => {
-        runToFileSink(s, "s06_sink") {
-          val cust = graft.queries.Tables.t(s, dir, "customer")
-            .select(col("c_custkey"), col("c_mktsegment"))
-          val stream = eventsStream(s, dir)
+        val cust = graft.queries.Tables.t(s, dir, "customer")
+          .select(col("c_custkey"), col("c_mktsegment"))
+        val events = eventsStream(s, dir)
+        runToFileSink(s, "s06_sink", inputBytes(s"$dir/events.parquet")) { ss =>
+          val stream = events(ss)
             .withWatermark("ts", "0 seconds")
             .join(broadcast(cust), col("user_id") === col("c_custkey"))
             .groupBy(window(col("ts"), "1 hour"), col("c_mktsegment"))
@@ -518,7 +624,7 @@ object StreamOps {
             .repartition(4, col("span"))
             .write.mode("overwrite").partitionBy("span").parquet(tmp.toString)
           import scala.jdk.CollectionConverters._
-          (0 until 4).foreach { k =>
+          pinSpanOrder((0 until 4).map { k =>
             val d = tmp.resolve(s"span=$k")
             val dst = scratch.resolve(s"batch$k.parquet")
             if (java.nio.file.Files.isDirectory(d)) {
@@ -539,14 +645,8 @@ object StreamOps {
                 .find(_.toString.endsWith(".parquet")).get
               java.nio.file.Files.move(f, dst)
             }
-            // one write job produced every span file with the same
-            // mtime; the file source admits files in timestamp order, so
-            // pin a strictly increasing mtime to make the name<->batch
-            // mapping (which the provenance require checks) explicit
-            java.nio.file.Files.setLastModifiedTime(dst,
-              java.nio.file.attribute.FileTime.fromMillis(
-                System.currentTimeMillis() - 60000L + k * 2000L))
-          }
+            dst
+          })
           graft.core.Fs.deleteRecursively(tmp.toString)
         }
         // eager store setup: metadata + template only, zero chunk writes
@@ -562,57 +662,52 @@ object StreamOps {
         val sschema = StructType(Seq(
           StructField("hour", LongType), StructField("value", DoubleType),
           StructField("part", LongType)))
-        val stream = s.readStream.schema(sschema)
-          .option("maxFilesPerTrigger", 1).parquet(scratch.toString)
-        val name = "s07_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val ckpt = (if (java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get("/dev/shm"))) "/dev/shm/" else
-            System.getProperty("java.io.tmpdir") + "/") + name + "_ckpt"
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (bdf: DataFrame, batchId: Long) =>
-            // the span index derives from the micro-batch id (files
-            // arrive in name order under maxFilesPerTrigger=1), NOT
-            // from the rows: an hour span with ZERO events must still
-            // write its densified all-zero chunks, or the read-back
-            // would depend on the store fill value instead of explicit
-            // zeros (latent at sparser scale factors where an entire
-            // span can be empty)
-            val k = batchId
-            val lo = k * fileSpan
-            val hi = math.min(lo + fileSpan, hours)
-            if (k < 4 && hi > lo) {
-              if (!bdf.isEmpty) {
-                val ks = bdf.select(col("part")).distinct().collect().map(_.getLong(0))
-                require(ks.toSeq == Seq(k),
-                  s"micro-batch $k expected source part $k, got ${ks.toSeq}")
+        runBounded(s, "s07", inputBytes(scratch.toString)) { (ss, ckpt) =>
+          ss.readStream.schema(sschema)
+            .option("maxFilesPerTrigger", 1).parquet(scratch.toString)
+            .writeStream
+            .option("checkpointLocation", ckpt)
+            .trigger(Trigger.AvailableNow())
+            .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+              // the span index derives from the micro-batch id (files
+              // arrive in span order under maxFilesPerTrigger=1, see
+              // pinSpanOrder), NOT from the rows: an hour span with ZERO
+              // events must still write its densified all-zero chunks, or
+              // the read-back would depend on the store fill value instead
+              // of explicit zeros (latent at sparser scale factors where an
+              // entire span can be empty)
+              val k = batchId
+              val lo = k * fileSpan
+              val hi = math.min(lo + fileSpan, hours)
+              if (k < 4 && hi > lo) {
+                if (!bdf.isEmpty) {
+                  val ks = bdf.select(col("part")).distinct().collect().map(_.getLong(0))
+                  require(ks.toSeq == Seq(k),
+                    s"micro-batch $k expected source part $k, got ${ks.toSeq}")
+                }
+                val agg = bdf.groupBy(col("hour"))
+                  .agg(count(lit(1)).as("n_events"),
+                    sum(col("value").cast("decimal(18,6)")).cast("double")
+                      .as("sum_value"))
+                // densify: zero-event hours in this span still own cells
+                val dense = s.range(lo, hi).toDF("hour")
+                  .join(agg, Seq("hour"), "left")
+                  .na.fill(0L, Seq("n_events")).na.fill(0.0, Seq("sum_value"))
+                  .withColumn("hour", col("hour") - lo)
+                val local = TabularBridge.fromDataFrame(dense, s,
+                  dims = Seq("hour" -> (hi - lo)),
+                  vars = Seq("n_events" -> DType.I64, "sum_value" -> DType.F64),
+                  chunks = Map("hour" -> chunk))
+                val shifted = local.chunkDataset.map { p: Pair =>
+                  (p._1.copy(offsets = p._1.offsets +
+                    ("hour" -> (p._1.offsets.getOrElse("hour", 0L) + lo))), p._2)
+                }
+                XbeamDataset.fromPairs(s, template, Map("hour" -> chunk),
+                  shifted, validate = false).toZarr(store, needsSetup = false)
               }
-              val agg = bdf.groupBy(col("hour"))
-                .agg(count(lit(1)).as("n_events"),
-                  sum(col("value").cast("decimal(18,6)")).cast("double")
-                    .as("sum_value"))
-              // densify: zero-event hours in this span still own cells
-              val dense = s.range(lo, hi).toDF("hour")
-                .join(agg, Seq("hour"), "left")
-                .na.fill(0L, Seq("n_events")).na.fill(0.0, Seq("sum_value"))
-                .withColumn("hour", col("hour") - lo)
-              val local = TabularBridge.fromDataFrame(dense, s,
-                dims = Seq("hour" -> (hi - lo)),
-                vars = Seq("n_events" -> DType.I64, "sum_value" -> DType.F64),
-                chunks = Map("hour" -> chunk))
-              val shifted = local.chunkDataset.map { p: Pair =>
-                (p._1.copy(offsets = p._1.offsets +
-                  ("hour" -> (p._1.offsets.getOrElse("hour", 0L) + lo))), p._2)
-              }
-              XbeamDataset.fromPairs(s, template, Map("hour" -> chunk),
-                shifted, validate = false).toZarr(store, needsSetup = false)
             }
-          }
-          .start()
-        try q.awaitTermination()
-        finally { try graft.core.Fs.deleteRecursively(ckpt)
-          catch { case _: Throwable => () } }
+            .start()
+        }
         TabularBridge.toDataFrame(XbeamDataset.fromZarr(s, store))
           .orderBy("hour")
       },
@@ -689,14 +784,14 @@ object StreamOps {
           dense.repartition(4, col("span"))
             .write.mode("overwrite").partitionBy("span").parquet(tmp.toString)
           import scala.jdk.CollectionConverters._
-          (0 until 4).foreach { k =>
+          pinSpanOrder((0 until 4).flatMap { k =>
             val d = tmp.resolve(s"span=$k")
-            if (java.nio.file.Files.isDirectory(d)) {
+            Option.when(java.nio.file.Files.isDirectory(d)) {
               val f = java.nio.file.Files.list(d).iterator().asScala
                 .find(_.toString.endsWith(".parquet")).get
               java.nio.file.Files.move(f, scratch.resolve(s"batch$k.parquet"))
             }
-          }
+          })
           graft.core.Fs.deleteRecursively(tmp.toString)
         }
         // eager template setup, zero chunk writes
@@ -710,21 +805,16 @@ object StreamOps {
         val sschema = StructType(Seq(
           StructField("hour", LongType), StructField("n_events", LongType),
           StructField("sum_value", DoubleType)))
-        val name = "s09_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val ckpt = (if (java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get("/dev/shm"))) "/dev/shm/" else
-            System.getProperty("java.io.tmpdir") + "/") + name + "_ckpt"
-        val q = s.readStream.schema(sschema)
-          .option("maxFilesPerTrigger", 1).parquet(scratch.toString)
-          .writeStream.format("zarr")
-          .option("path", store)
-          .option("dims", "hour")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally { try graft.core.Fs.deleteRecursively(ckpt)
-          catch { case _: Throwable => () } }
+        runBounded(s, "s09", inputBytes(scratch.toString)) { (ss, ckpt) =>
+          ss.readStream.schema(sschema)
+            .option("maxFilesPerTrigger", 1).parquet(scratch.toString)
+            .writeStream.format("zarr")
+            .option("path", store)
+            .option("dims", "hour")
+            .option("checkpointLocation", ckpt)
+            .trigger(Trigger.AvailableNow())
+            .start()
+        }
         TabularBridge.toDataFrame(XbeamDataset.fromZarr(s, store))
           .orderBy("hour")
       },
@@ -794,14 +884,14 @@ object StreamOps {
             .repartition(4, col("span"))
             .write.mode("overwrite").partitionBy("span").parquet(tmp.toString)
           import scala.jdk.CollectionConverters._
-          (0 until 4).foreach { k =>
+          pinSpanOrder((0 until 4).flatMap { k =>
             val d = tmp.resolve(s"span=$k")
-            if (java.nio.file.Files.isDirectory(d)) {
+            Option.when(java.nio.file.Files.isDirectory(d)) {
               val f = java.nio.file.Files.list(d).iterator().asScala
                 .find(_.toString.endsWith(".parquet")).get
               java.nio.file.Files.move(f, scratch.resolve(s"batch$k.parquet"))
             }
-          }
+          })
           graft.core.Fs.deleteRecursively(tmp)
         }
         // zero-initialized accumulator store, METADATA-ONLY: the
@@ -817,51 +907,32 @@ object StreamOps {
           Map.empty, Map.empty), Map("hour" -> chunk))
         val sschema = StructType(Seq(
           StructField("ts", TimestampType), StructField("value", DoubleType)))
-        val name = "s10_" + java.util.UUID.randomUUID.toString.replace("-", "")
-        val ckpt = (if (java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get("/dev/shm"))) "/dev/shm/" else
-            System.getProperty("java.io.tmpdir") + "/") + name + "_ckpt"
-        // state partitions sized to the job, not the session default:
-        // the stateful agg holds <=720 hour keys, but each micro-batch
-        // pays a per-state-partition commit (provider open + delta +
-        // snapshot bookkeeping), so 32 session-default partitions x 4
-        // batches is 128 near-empty state commits of pure fixed cost.
-        // 8 partitions carry the same keys at a quarter of the
-        // commit count (~2.4 s off the 4-batch run at sf0.1). The
-        // partitioning is fixed at checkpoint creation; the checkpoint
-        // is fresh per run, and the session value is restored below.
-        val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-        val savedNoData =
-          s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        // UPDATE mode emits a key only when a data batch changes it; the
-        // trailing no-data watermark batch can only evict state, never
-        // emit (probed: batch 4, 0 rows, ~0.4 s) — the store holds the
-        // converged totals after batch 3 either way. Skip it.
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-        val q = s.readStream.schema(sschema)
-          .option("maxFilesPerTrigger", 1).parquet(scratch.toString)
-          .withWatermark("ts", "1 hour")
-          .groupBy(expr(
-            s"(unix_micros(date_trunc('hour', ts)) - ${h0us}L) div 3600000000")
-            .as("hour"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast("decimal(18,6)")).cast("double")
-              .as("sum_value"))
-          .writeStream.format("zarr")
-          .option("path", store)
-          .option("dims", "hour")
-          .option("checkpointLocation", ckpt)
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally {
-          s.conf.set("spark.sql.shuffle.partitions", savedParts)
-          s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-            savedNoData)
-          try graft.core.Fs.deleteRecursively(ckpt)
-          catch { case _: Throwable => () }
+        // the stateful agg holds <=720 hour keys and each micro-batch
+        // pays a commit per state partition (provider open + delta +
+        // snapshot bookkeeping), so their count comes from the input
+        // size, not the session default. UPDATE mode emits a key only
+        // when a data batch changes it; the trailing no-data watermark
+        // batch can only evict state, never emit (probed: batch 4, 0
+        // rows, ~0.4 s) — the store holds the converged totals after
+        // batch 3 either way. Skip it.
+        runBounded(s, "s10", inputBytes(scratch.toString),
+            noDataBatch = false) { (ss, ckpt) =>
+          ss.readStream.schema(sschema)
+            .option("maxFilesPerTrigger", 1).parquet(scratch.toString)
+            .withWatermark("ts", "1 hour")
+            .groupBy(expr(
+              s"(unix_micros(date_trunc('hour', ts)) - ${h0us}L) div 3600000000")
+              .as("hour"))
+            .agg(count(lit(1)).as("n_events"),
+              sum(col("value").cast("decimal(18,6)")).cast("double")
+                .as("sum_value"))
+            .writeStream.format("zarr")
+            .option("path", store)
+            .option("dims", "hour")
+            .option("checkpointLocation", ckpt)
+            .outputMode("update")
+            .trigger(Trigger.AvailableNow())
+            .start()
         }
         TabularBridge.toDataFrame(XbeamDataset.fromZarr(s, store))
           .orderBy("hour")
@@ -927,13 +998,13 @@ object StreamOps {
           "array_sort(transform(shingles, x -> xxhash64(x))) AS h_old",
           "size(shingles) AS sz_old")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try runToFileSink(s, "s11_sink") {
+        try runToFileSink(s, "s11_sink", inputBytes(s"$dir/documents.parquet")) { ss =>
           // stream side: new documents, shingled + banded per micro-batch
           val schema = StructType(Seq(
             StructField("doc_id", LongType), StructField("text", StringType),
             StructField("lang", StringType), StructField("source", StringType),
             StructField("n_chars", LongType)))
-          val newDocs = s.readStream.schema(schema)
+          val newDocs = ss.readStream.schema(schema)
             .option("pathGlobFilter", "documents.parquet").parquet(dir)
             .filter("doc_id % 3 = 0")
             .filter(expr("size(split(text, ' ')) >= 3"))
