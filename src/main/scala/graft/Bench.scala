@@ -1,6 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Parse `SPARK_GRAFT_EXTRA_CONF` ("k=v;k2=v2"; blank tokens are
+    * skipped): a token without `=` or with an empty key fails, naming
+    * the token, instead of being dropped. */
+  def extraConf(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.filter(_.trim.nonEmpty).map { kv =>
+      val eq = kv.indexOf('=')
+      val key = kv.take(eq).trim // "" when there is no '='
+      require(key.nonEmpty, s"SPARK_GRAFT_EXTRA_CONF: token '$kv' is not key=value")
+      (key, kv.drop(eq + 1).trim)
+    }
+
   def main(args: Array[String]): Unit = {
     // Heap guard: the recorded baseline assumes the pinned 8 GiB forked
     // heap (build.sbt). EITHER direction off that regime invalidates
@@ -44,10 +55,7 @@ object Bench {
     // cluster-scale parameterization without editing this file; the
     // driver's canonical bench leaves it unset.
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach {
-      _.split(";").filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder0.config(k.trim, v.trim)
-      }
+      extraConf(_).foreach { case (k, v) => builder0.config(k, v) }
     }
     if (master.startsWith("local-cluster"))
       builder0.config("spark.executor.extraClassPath",

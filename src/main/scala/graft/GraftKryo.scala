@@ -3,7 +3,10 @@ package graft
 /** Kryo registrations for the chunk-engine shuffle payloads: registered
   * classes serialize as small ids instead of full class-name strings,
   * which matters once billions of (ChunkKey, ArrayChunk) pairs cross
-  * the wire. */
+  * the wire. Registration only names classes: `NdArray`'s wire format
+  * ([[graft.ndarray.NdArraySerializer]]) comes from its
+  * `@DefaultSerializer` annotation, so Kryo instances built without
+  * this list write the same payload bytes. */
 object GraftKryo {
   val classes: String = Seq(
     "graft.core.ChunkKey",

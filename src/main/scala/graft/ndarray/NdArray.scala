@@ -2,6 +2,8 @@ package graft.ndarray
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import com.esotericsoftware.kryo.DefaultSerializer
+
 /** Element dtype of an [[NdArray]]. Encodes the Zarr v2 dtype string and
   * the itemsize. `TimeNs` is datetime64[ns] stored as little-endian i64
   * (the reference's time coordinates, e.g. xarray_beam test_util.py:96).
@@ -39,12 +41,21 @@ object DType {
   *
   * Float reads/writes go through a Double view, integer ones through a
   * Long view; conversions are exact for every value the engine handles.
+  *
+  * Kryo (every chunk-engine shuffle and persisted chunk Dataset) writes
+  * it in the byte-lane wire format of [[NdArraySerializer]].
   */
+@DefaultSerializer(classOf[NdArraySerializer])
 final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
     extends Serializable {
 
   def ndim: Int = shape.length
-  def size: Long = shape.foldLeft(1L)(_ * _)
+  def size: Long = {
+    var n = 1L
+    var i = 0
+    while (i < shape.length) { n *= shape(i); i += 1 }
+    n
+  }
   def nbytes: Long = size * dtype.itemsize
 
   require(nbytes == data.length,
@@ -2871,10 +2882,19 @@ object NdArray {
     NdArray(dtype, shape.clone(), new Array[Byte](n.toInt))
   }
 
+  /** Every element set as by `setDouble(_, value)`: the first element
+    * is written once, then the filled prefix doubles by `arraycopy`. */
   def fill(dtype: DType, shape: Array[Int], value: Double): NdArray = {
     val a = zeros(dtype, shape)
-    var i = 0L
-    while (i < a.size) { a.setDouble(i, value); i += 1 }
+    val n = a.data.length
+    if (n == 0) return a
+    a.setDouble(0, value)
+    var filled = dtype.itemsize
+    while (filled < n) {
+      val k = math.min(filled, n - filled)
+      System.arraycopy(a.data, 0, a.data, filled, k)
+      filled += k
+    }
     a
   }
 

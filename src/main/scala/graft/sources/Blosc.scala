@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import graft.ndarray.ByteLanes
+
 /** Blosc1 frame codec — the default compressor of real-world Zarr v2
   * stores (numcodecs `Blosc(cname='lz4', clevel=5, shuffle=SHUFFLE)`),
   * which the reference opens transparently via zarr-python
@@ -30,7 +32,8 @@ import java.nio.{ByteBuffer, ByteOrder}
   * then payload; length == uncompressed stream size marks a stored
   * (incompressible) stream. Blocks byte-unshuffle after stream decode:
   * the shuffled image groups byte-lane j of every element together,
-  * with any sub-element remainder bytes carried through unchanged.
+  * with any sub-element remainder bytes carried through unchanged
+  * ([[graft.ndarray.ByteLanes]], which the NdArray wire format shares).
   *
   * The blosclz inner codec (c-blosc's native FastLZ-derived LZ77) is
   * implemented directly — see [[blosclzDecompress]]. The bit-shuffle
@@ -109,7 +112,7 @@ object Blosc {
         pos += cb
         s += 1
       }
-      if (byteShuffle) unshuffle(typesize, tmp, bsize, out, b * blocksize)
+      if (byteShuffle) ByteLanes.unshuffle(typesize, tmp, 0, bsize, out, b * blocksize)
       else if (bitShuffle) bitUnshuffle(typesize, tmp, bsize, out, b * blocksize)
       b += 1
     }
@@ -336,7 +339,7 @@ object Blosc {
       val leftover = bsize != blocksize
       bstarts.putInt(headerLen + body.size())
       val src = if (doShuffle) {
-        shuffleBytes(typesize, data, b * blocksize, bsize, tmp); tmp
+        ByteLanes.shuffle(typesize, data, b * blocksize, bsize, tmp, 0); tmp
       } else if (bitShuffle) {
         bitShuffleBytes(typesize, data, b * blocksize, bsize, tmp, 0); tmp
       } else data
@@ -407,28 +410,6 @@ object Blosc {
   }
 
   // ------------------------------------------------------------ shuffle
-
-  /** Byte shuffle src[srcOff, srcOff+len) into dest[0, len): byte-lane j
-    * of each typesize-wide element becomes contiguous; trailing bytes of
-    * a partial element pass through unchanged. */
-  private[sources] def shuffleBytes(typesize: Int, src: Array[Byte],
-                                    srcOff: Int, len: Int,
-                                    dest: Array[Byte]): Unit = {
-    val nelem = len / typesize
-    var j = 0
-    while (j < typesize) {
-      var i = 0
-      var s = srcOff + j
-      var d = j * nelem
-      while (i < nelem) {
-        dest(d) = src(s)
-        s += typesize; d += 1; i += 1
-      }
-      j += 1
-    }
-    var r = nelem * typesize
-    while (r < len) { dest(r) = src(srcOff + r); r += 1 }
-  }
 
   /** Transpose the 8×8 bit matrix held in a long (byte i = row i, bit
     * j = column j): result byte j bit i = input byte i bit j. The
@@ -511,24 +492,5 @@ object Blosc {
     }
     val done = ne8 * typesize
     System.arraycopy(src, done, dest, destOff + done, len - done)
-  }
-
-  /** Inverse of [[shuffleBytes]]: src[0, len) → dest[destOff, destOff+len). */
-  private[sources] def unshuffle(typesize: Int, src: Array[Byte], len: Int,
-                                 dest: Array[Byte], destOff: Int): Unit = {
-    val nelem = len / typesize
-    var j = 0
-    while (j < typesize) {
-      var i = 0
-      var s = j * nelem
-      var d = destOff + j
-      while (i < nelem) {
-        dest(d) = src(s)
-        s += 1; d += typesize; i += 1
-      }
-      j += 1
-    }
-    var r = nelem * typesize
-    while (r < len) { dest(destOff + r) = src(r); r += 1 }
   }
 }

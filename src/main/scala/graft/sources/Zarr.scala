@@ -1561,7 +1561,8 @@ object Zarr {
           j += 1
         }
         val blockData =
-          if (full) arr.slice(selStarts, selLens)
+          if (full && java.util.Arrays.equals(selLens, arr.shape)) arr
+          else if (full) arr.slice(selStarts, selLens)
           else {
             val padded = NdArray.fill(meta.dtype, meta.chunks.toArray, meta.fillValue)
             padded.insert(new Array[Int](nd), arr.slice(selStarts, selLens))

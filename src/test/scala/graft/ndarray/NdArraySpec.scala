@@ -13,6 +13,22 @@ class NdArraySpec extends AnyFunSuite {
     assert(a.strides.toSeq == Seq(12L, 4L, 1L))
   }
 
+  test("fill matches per-element setDouble for every dtype and shape") {
+    val dtypes = Seq(DType.F32, DType.F64, DType.I32, DType.I64, DType.I16,
+      DType.I8, DType.U8, DType.Bool, DType.TimeNs)
+    val values = Seq(0.0, -0.0, 1.5, -3.0, 300.0, 1e20, Double.NaN,
+      Double.PositiveInfinity, Double.NegativeInfinity)
+    val shapes = Seq(Array[Int](), Array(0), Array(1), Array(3), Array(7, 5),
+      Array(2, 0, 3), Array(3, 1, 9))
+    for (dtype <- dtypes; v <- values; shape <- shapes) {
+      val expect = NdArray.zeros(dtype, shape)
+      var i = 0L
+      while (i < expect.size) { expect.setDouble(i, v); i += 1 }
+      val got = NdArray.fill(dtype, shape, v)
+      assert(got.sameAs(expect), s"$dtype ${shape.mkString("x")} fill $v")
+    }
+  }
+
   test("slice extracts a hyper-rectangle (row-major values)") {
     val a = arange(DType.I64, 3, 4) // [[0..3],[4..7],[8..11]]
     val s = a.slice(Array(1, 1), Array(2, 2))

@@ -4,6 +4,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ndarray.ByteLanes
+
 class BloscSpec extends AnyFunSuite {
 
   private def patterned(n: Int): Array[Byte] =
@@ -51,8 +53,8 @@ class BloscSpec extends AnyFunSuite {
       val data = randomBytes(n, seed = n * typesize)
       val sh = new Array[Byte](n)
       val back = new Array[Byte](n)
-      Blosc.shuffleBytes(typesize, data, 0, n, sh)
-      Blosc.unshuffle(typesize, sh, n, back, 0)
+      ByteLanes.shuffle(typesize, data, 0, n, sh, 0)
+      ByteLanes.unshuffle(typesize, sh, 0, n, back, 0)
       assert(back.sameElements(data), s"typesize=$typesize n=$n")
     }
   }
@@ -93,7 +95,7 @@ class BloscSpec extends AnyFunSuite {
     val data = Array.tabulate(n)(i => ((i / 16) % 7).toByte)
     val typesize = 2
     val sh = new Array[Byte](n)
-    Blosc.shuffleBytes(typesize, data, 0, n, sh)
+    ByteLanes.shuffle(typesize, data, 0, n, sh, 0)
     val neblock = n / typesize
     val lz = net.jpountz.lz4.LZ4Factory.fastestInstance().fastCompressor()
     val c0buf = new Array[Byte](lz.maxCompressedLength(neblock))

@@ -59,6 +59,20 @@ class ZarrSpec extends AnyFunSuite {
     assert(mid.sameAs(data.slice(Array(3, 2), Array(4, 3))))
   }
 
+  test("a region of exactly one stored chunk is written as the array's bytes") {
+    val path = tmpStore()
+    Zarr.setupStore(path, template, Map("t" -> 4, "x" -> 6))
+    val meta = Zarr.readArrayMeta(path, "v")
+    val block = arange(DType.F64, 10, 6).slice(Array(4, 0), Array(4, 6))
+    val before = block.data.clone()
+    Zarr.writeRegion(path, "v", meta, Array(4L, 0L), block)
+    assert(block.data.sameElements(before), "the source array is unchanged")
+    // uncompressed v2 chunk file 1.0 holds exactly the region's bytes
+    assert(Files.readAllBytes(java.nio.file.Paths.get(path, "v", "1.0"))
+      .sameElements(before))
+    assert(Zarr.readRegion(path, "v", meta, Array(4L, 0L), Array(4, 6)).sameAs(block))
+  }
+
   test("openStore infers dims/vars/coords/attrs and stored chunking") {
     val path = tmpStore()
     Zarr.setupStore(path, template, Map("t" -> 5, "x" -> 3))
