@@ -1,17 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  /** Parse `SPARK_GRAFT_EXTRA_CONF` ("k=v;k2=v2"; blank tokens are
-    * skipped): a token without `=` or with an empty key fails, naming
-    * the token, instead of being dropped. */
-  def extraConf(spec: String): Seq[(String, String)] =
-    spec.split(";").toSeq.filter(_.trim.nonEmpty).map { kv =>
-      val eq = kv.indexOf('=')
-      val key = kv.take(eq).trim // "" when there is no '='
-      require(key.nonEmpty, s"SPARK_GRAFT_EXTRA_CONF: token '$kv' is not key=value")
-      (key, kv.drop(eq + 1).trim)
-    }
-
   def main(args: Array[String]): Unit = {
     // Heap guard: the recorded baseline assumes the pinned 8 GiB forked
     // heap (build.sbt). EITHER direction off that regime invalidates
@@ -26,55 +14,7 @@ object Bench {
           "other heap are not comparable to BASELINE.md.")
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER switches to a multi-JVM master for the
-    // cross-executor probe (BENCH_sf1.json multijvm_probe) — timings
-    // there are NOT comparable to BASELINE.md's single-JVM rows; the
-    // driver's canonical bench leaves this unset.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pin the zone so the events TIMESTAMP_NTZ->TIMESTAMP conversion
-      // (Tables.normalizeTs) is host-independent, same as Verify
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Size post-shuffle partitions from DATA (AQE advisory size, 64 MB
-      // default), not from the core count: with the default
-      // parallelismFirst=true, AQE refuses to coalesce below the session
-      // parallelism, so at local[32] every tiny sf0.1 exchange ran 32
-      // near-empty reduce tasks of pure fixed cost — measured 32 cores
-      // SLOWER than 8 (BENCH_r21 139.4 s vs BENCH_r21_c8 114.5 s; the
-      // r22 subset A/B reads 13.33 -> 12.43 s from this one flag). This
-      // is the Spark-documented production recommendation and is
-      // scale-correct at 100 TB: partitions come out ~advisory-sized
-      // whatever the cluster width. Override via SPARK_GRAFT_EXTRA_CONF.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.kryo.classesToRegister", GraftKryo.classes)
-    // Ad-hoc conf overrides ("k=v;k2=v2") for A/B experiments and for
-    // cluster-scale parameterization without editing this file; the
-    // driver's canonical bench leaves it unset.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach {
-      extraConf(_).foreach { case (k, v) => builder0.config(k, v) }
-    }
-    if (master.startsWith("local-cluster"))
-      builder0.config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path"))
-    val spark = builder0.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Quiet the streaming planner's per-micro-batch AQE warnings
-    // ("spark.sql.adaptive.enabled is not supported in streaming" /
-    // "Disabling AQE since AQE is not supported in stateful
-    // workloads"): expected in local streaming demos, and they would
-    // otherwise dominate the harness tail and mask real warnings.
-    locally {
-      import org.apache.logging.log4j.Level
-      import org.apache.logging.log4j.core.config.Configurator
-      Seq(
-        "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution",
-        "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream"
-      ).foreach(n => Configurator.setLevel(n, Level.ERROR))
-    }
+    val spark = GraftSession.build()
     // Host-IO drift sentinel (see BASELINE.md "Store-write drift
     // sentinel"): a FIXED 32 MiB uncompressed local zarr write (setup +
     // 4 region writes of an 8 MiB block), measured in isolation before

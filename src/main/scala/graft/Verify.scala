@@ -1,28 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER switches the SAME correctness surface to a
-    // multi-JVM master (e.g. local-cluster[2,8,4096]) — the round-18
-    // distributed-evidence run; default stays single-process local[N]
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same data-sized AQE partition coalescing as Bench (see there)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path"))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated names); driver leaves it unset.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -31,7 +14,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: $e")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

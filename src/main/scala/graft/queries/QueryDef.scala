@@ -39,9 +39,9 @@ final case class QueryDef(
   * therefore pays its own materialization (honest per-gate timing) and
   * leaves ZERO cached blocks behind.
   *
-  * `spark.graft.queryScope=lazy` (PlanDump, plan-shape specs) skips the
-  * checkpoint and the unpersist so the returned DataFrame still carries
-  * the full optimizable plan for inspection; persists then behave
+  * `spark.graft.queryScope=lazy` (Probe's plan dump, plan-shape specs)
+  * skips the checkpoint and the unpersist so the returned DataFrame still
+  * carries the full optimizable plan for inspection; persists then behave
   * exactly as in round 21. */
 object CacheScope {
   import org.apache.spark.storage.StorageLevel

@@ -28,6 +28,10 @@ object SessionBridge {
       !member("sparkContextRelativePaths").asInstanceOf[java.util.List[_]].isEmpty
   }
 
+  /** Block until every event posted so far on the context's listener
+    * bus was delivered to every listener. */
+  def drainListeners(s: SparkSession): Unit = s.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Unregister, from the context's listener bus, the streaming listener
     * bus that delivers to `marker`. Every session's StreamingQueryManager
     * registers one such bus for the life of the SparkContext; a session

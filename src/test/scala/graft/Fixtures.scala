@@ -26,27 +26,16 @@ object TestSpark {
     // (local[4, 3]) so fault-injection specs can exercise the
     // idempotent-write-under-retry contract.
     val master = sys.env.getOrElse("SPARK_GRAFT_TEST_MASTER", "local[4, 3]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
+    // Everything else is GraftSession's table, the conf Bench measures.
+    GraftSession.build(master, Seq(
+      "spark.app.name" -> "graft-tests",
+      "spark.sql.shuffle.partitions" -> "4",
       // plan-shape specs inspect the gates' full optimizable plans;
       // eager query scoping would checkpoint results and hide them
-      .config("spark.graft.queryScope", "lazy")
-    if (master.startsWith("local-cluster")) {
-      // executor JVMs are forked fresh: they need this test JVM's full
-      // classpath (graft classes + test classes + scalatest and spark
-      // jars) and enough retries for the fault-injection specs
-      builder
-        .config("spark.executor.extraClassPath",
-          System.getProperty("java.class.path"))
-        .config("spark.task.maxFailures", "3")
-    }
-    val s = builder.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+      "spark.graft.queryScope" -> "lazy") ++
+      // enough retries for the fault-injection specs across executor JVMs
+      (if (master.startsWith("local-cluster")) Seq("spark.task.maxFailures" -> "3")
+      else Nil))
   }
 
   /** True when the suite runs across process boundaries (executors in

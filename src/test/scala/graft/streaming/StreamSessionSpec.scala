@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.graftshim.ListenerBuses
+import org.apache.spark.sql.graftshim.{ListenerBuses, SessionBridge}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -92,7 +92,7 @@ class StreamSessionSpec extends AnyFunSuite {
           "s08_stream_from_zarr", "s10_stream_update_into_zarr").foreach { g =>
         val n0 = p.progress.size
         gate(g)
-        ListenerBuses.drain(spark)
+        SessionBridge.drainListeners(spark)
         assert(p.progress.size > n0, s"$g: no progress event reached the caller")
         val after = spark.conf.getAll
         val changed = (before.keySet ++ after.keySet)
@@ -112,7 +112,7 @@ class StreamSessionSpec extends AnyFunSuite {
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       gate("s01_stream_hourly_windows")
       val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-      ListenerBuses.drain(spark)
+      SessionBridge.drainListeners(spark)
       assert(compiled == 0, s"a warm s01 run compiled $compiled classes")
       assert(p.started.get == 1)
       assert(p.progress.size == 2)
@@ -126,7 +126,7 @@ class StreamSessionSpec extends AnyFunSuite {
       .foreach { g =>
         def run(): (Array[Row], Set[Int]) = withProbe { p =>
           val rows = gate(g)
-          ListenerBuses.drain(spark)
+          SessionBridge.drainListeners(spark)
           (rows, p.progress.asScala.map(_._1).toSet)
         }
         val (derived, derivedParts) = run()
@@ -151,10 +151,10 @@ class StreamSessionSpec extends AnyFunSuite {
     // bus on the context for good; Spark's own per-query session of a
     // stateful stream adds one, the stream's clone must not add another
     def growth(run: => Unit): Int = {
-      ListenerBuses.drain(spark)
+      SessionBridge.drainListeners(spark)
       val before = ListenerBuses.streamingBuses(spark)
       run
-      ListenerBuses.drain(spark)
+      SessionBridge.drainListeners(spark)
       ListenerBuses.streamingBuses(spark) - before
     }
     def counts(s: SparkSession, ckpt: String) =

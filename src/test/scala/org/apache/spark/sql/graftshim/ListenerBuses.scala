@@ -5,10 +5,6 @@ import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBu
 
 /** Test-only view of the context's listener bus (`private[spark]`). */
 object ListenerBuses {
-  /** Block until every event posted so far was delivered to every
-    * listener. */
-  def drain(s: SparkSession): Unit = s.sparkContext.listenerBus.waitUntilEmpty()
-
   /** Streaming listener buses registered on the context's listener bus,
     * one per session that has started a stream or listed its listeners. */
   def streamingBuses(s: SparkSession): Int =
