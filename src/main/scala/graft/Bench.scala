@@ -126,7 +126,6 @@ object Bench {
     // window exec, and the parquet reader once so the first measured
     // query doesn't absorb session/JIT initialization (~5s measured).
     locally {
-      import spark.implicits._
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
       val r = spark.range(10000).toDF("i")

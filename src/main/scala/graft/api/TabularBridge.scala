@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.core.{ArrayChunk, ChunkGrid, ChunkKey, Template, VarArray, VarSpec}

@@ -1969,7 +1969,6 @@ final class XbeamDataset private (
     require(template.dimSizes(dim) <= Int.MaxValue,
       s"rank over dim $dim: extent ${template.dimSizes(dim)} exceeds one chunk")
     import ChunkTransforms.{Pair, pairEnc}
-    import org.apache.spark.sql.Encoders
     val d = dim
     val capBytes = spark.conf
       .get("spark.graft.cellwise.maxBytes", (256L << 20).toString).toLong
@@ -2784,18 +2783,13 @@ final class XbeamDataset private (
   }
 
   /** Cumulative sum along `dim` — the distributed prefix-scan pattern
-    * (vs. [[mapWithHalo]]'s fixed-neighbor exchange). Short lanes
-    * (<= `spark.graft.scan.longLaneThreshold` chunks) take the FUSED
-    * path: one lane-partitioned secondary-sorted shuffle of chunk
-    * bodies with a streaming fold that computes each chunk's exclusive
-    * prefix sliver on the fly and seeds the in-chunk running sum
-    * immediately. Longer lanes stage: (1) each chunk reduces to a
-    * per-lane sliver; (2) slivers scan to exclusive prefixes through
-    * the two-level [[lanePrefixes]] engine — O(sqrt n) parallel
-    * blocks, one resident sliver per task; (3) prefixes rejoin their
-    * chunks co-partitioned. Either way chunk bodies cross the wire
-    * once and scan-carried state is the reduced sliver. Exact for
-    * integer-valued data in any merge order. Variables not spanning
+    * (vs. [[mapWithHalo]]'s fixed-neighbor exchange): each chunk
+    * reduces to a per-lane sliver (its lane totals), the slivers fold
+    * left in dim order into each chunk's exclusive prefix, and the
+    * prefix seeds the chunk's own running sum. [[laneScan]] picks
+    * where the fold runs (in one lane-sorted shuffle, or on the driver
+    * with broadcast seeds); both routes fold in the same order, so the
+    * output bits do not depend on the route. Variables not spanning
     * `dim` pass through unchanged. */
   def cumsum(dim: String): XbeamDataset =
     prefixScanAlong(dim)(
@@ -2858,65 +2852,25 @@ final class XbeamDataset private (
                         reverse: Boolean): XbeamDataset = {
     require(template.dimSizes.contains(dim), s"unknown dim $dim")
     require(limit >= 1, s"fill limit must be >= 1, got $limit")
-    import ChunkTransforms.pairEnc
-    import org.apache.spark.sql.Encoders
     val d = dim
     val lim = limit
     val rev = reverse
-    val nChunks = scanChunksAlong(d)
-    val joined = if (scanRouteFused(d, nChunks)) {
-      // short lanes: one fused chunk-body shuffle, no sliver stages
-      fusedLaneScan(d, rev)(
-        (k, c) => {
-          val off = k.offsets.getOrElse(d, 0L)
-          c.vars.collect {
-            case (n, va) if va.dims.contains(d) =>
-              val ax = va.dims.indexOf(d)
-              n -> VarArray("__s" +: va.dims.filterNot(_ == d),
-                va.arr.edgeValidWithIndexAlong(ax, off, last = !rev))
-          }
-        },
-        shape => NdArray.fill(DType.F64, shape, Double.NaN),
-        XbeamDataset.overwritePair,
-        (k, c, seeds) => {
-          val off = k.offsets.getOrElse(d, 0L)
-          ArrayChunk(c.vars.map { case (n, va) =>
-            if (!va.dims.contains(d)) n -> va
-            else {
-              val ax = va.dims.indexOf(d)
-              n -> VarArray(va.dims,
-                if (rev) va.arr.bfillLimitAlong(ax, off, lim, seeds.get(n))
-                else va.arr.ffillLimitAlong(ax, off, lim, seeds.get(n)))
-            }
-          })
-        })
-    } else {
-      val partials = chunkDataset.map { p: Pair =>
-        val (k, c) = p
+    val joined = laneScan(d, rev, stackK = 2)(
+      edgeSlivers(d, last = !rev),
+      shape => NdArray.fill(DType.F64, shape, Double.NaN),
+      XbeamDataset.overwritePair,
+      (k, c, seeds) => {
         val off = k.offsets.getOrElse(d, 0L)
-        (k, ArrayChunk(c.vars.collect {
-          case (n, va) if va.dims.contains(d) =>
-            val ax = va.dims.indexOf(d)
-            n -> VarArray("__s" +: va.dims.filterNot(_ == d),
-              va.arr.edgeValidWithIndexAlong(ax, off, last = !rev))
-        }))
-      }.filter { p: Pair => p._2.vars.nonEmpty }
-      seedStagedApply(partials, d, rev,
-          shape => NdArray.fill(DType.F64, shape, Double.NaN),
-          XbeamDataset.overwritePair, stackK = 2) { (key, ownChunk, seeds) =>
-        val off = key.offsets.getOrElse(d, 0L)
-        (key, ArrayChunk(ownChunk.vars.map { case (n, va) =>
+        ArrayChunk(c.vars.map { case (n, va) =>
           if (!va.dims.contains(d)) n -> va
           else {
             val ax = va.dims.indexOf(d)
-            val seed = seeds.get(n)
             n -> VarArray(va.dims,
-              if (rev) va.arr.bfillLimitAlong(ax, off, lim, seed)
-              else va.arr.ffillLimitAlong(ax, off, lim, seed))
+              if (rev) va.arr.bfillLimitAlong(ax, off, lim, seeds.get(n))
+              else va.arr.ffillLimitAlong(ax, off, lim, seeds.get(n)))
           }
-        }))
-      }
-    }
+        })
+      })
     val newTemplate = template.copy(vars = template.vars.map { case (n, vs) =>
       n -> VarSpec(vs.dims, if (vs.dims.contains(dim)) DType.F64 else vs.dtype)
     })
@@ -2970,8 +2924,6 @@ final class XbeamDataset private (
   def ewm(dim: String, alpha: Double): XbeamDataset = {
     require(template.dimSizes.contains(dim), s"unknown dim $dim")
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
-    import ChunkTransforms.pairEnc
-    import org.apache.spark.sql.Encoders
     val d = dim
     val al = alpha
     val beta = 1.0 - alpha
@@ -3019,11 +2971,9 @@ final class XbeamDataset private (
       while (i < half) {
         val a1 = acc.getDouble(i); val b1 = acc.getDouble(half + i)
         val a2 = sliver.getDouble(i); val b2 = sliver.getDouble(half + i)
-        // the marker is a TWO-SIDED identity: the staged two-level
-        // scan folds block seeds in front of block-local prefixes, so
-        // the marker shows up on either side of a composition
+        // the marker is a left identity: the scan folds slivers onto
+        // it in order, and a sliver's plane `a` is never -1
         if (a1 == -1.0) { out.setDouble(i, a2); out.setDouble(half + i, b2) }
-        else if (a2 == -1.0) { out.setDouble(i, a1); out.setDouble(half + i, b1) }
         else {
           out.setDouble(i, a1 * a2)
           out.setDouble(half + i, a2 * b1 + b2)
@@ -3046,19 +2996,8 @@ final class XbeamDataset private (
           n -> VarArray(va.dims, va.arr.ewmAlong(ax, al, seed))
         }
       })
-    val nChunks = scanChunksAlong(d)
-    val out = if (scanRouteFused(d, nChunks)) {
-      fusedLaneScan(d, reverse = false)(
-        sliverVars, init, combine, (_, c, seeds) => applyChunk(c, seeds))
-    } else {
-      val partials = chunkDataset.map { p: Pair =>
-        (p._1, ArrayChunk(sliverVars(p._1, p._2)))
-      }.filter { p: Pair => p._2.vars.nonEmpty }
-      seedStagedApply(partials, d, reverse = false, init, combine,
-          stackK = 2) { (key, ownChunk, seeds) =>
-        (key, applyChunk(ownChunk, seeds))
-      }
-    }
+    val out = laneScan(d, reverse = false, stackK = 2)(
+      sliverVars, init, combine, (_, c, seeds) => applyChunk(c, seeds))
     val newTemplate = template.copy(vars = template.vars.map { case (n, vs) =>
       n -> VarSpec(vs.dims, if (vs.dims.contains(d)) DType.F64 else vs.dtype)
     })
@@ -3122,12 +3061,9 @@ final class XbeamDataset private (
     * halves. Each var spanning `dim` yields `<name>_cmin` and
     * `<name>_cmax`; the scan sliver is a stacked `[2] ++ laneShape`
     * carrying (min, max) together, so chunk bodies cross the machinery
-    * once. Both monoids are exactly associative → bit-exact on either
-    * scan path (fused or staged two-level). */
+    * once. */
   def cumminmax(dim: String): XbeamDataset = {
     require(template.dimSizes.contains(dim), s"unknown dim $dim")
-    import ChunkTransforms.pairEnc
-    import org.apache.spark.sql.Encoders
     val d = dim
     template.vars.foreach { case (n, vs) =>
       if (vs.dims.contains(d))
@@ -3175,27 +3111,14 @@ final class XbeamDataset private (
               va.arr.cumExtremeAlong(ax, isMin = false, seed.map(_._2))))
         }
       })
-    val stackedSlivers: ArrayChunk => Map[String, VarArray] = c =>
-      c.vars.collect {
+    val out = laneScan(d, reverse = false, stackK = 2)(
+      (_, c) => c.vars.collect {
         case (n, va) if va.dims.contains(d) =>
           val ax = va.dims.indexOf(d)
           n -> VarArray("__s" +: va.dims.filterNot(_ == d),
             sliverOf(va.arr, ax))
-      }
-    val nChunks = scanChunksAlong(d)
-    val out = if (scanRouteFused(d, nChunks)) {
-      fusedLaneScan(d, reverse = false)(
-        (_, c) => stackedSlivers(c), init, combine,
-        (_, c, seeds) => applyChunk(c, seeds))
-    } else {
-      val partials = chunkDataset.map { p: Pair =>
-        (p._1, ArrayChunk(stackedSlivers(p._2)))
-      }.filter { p: Pair => p._2.vars.nonEmpty }
-      seedStagedApply(partials, d, reverse = false, init, combine,
-          stackK = 2) { (key, ownChunk, seeds) =>
-        (key, applyChunk(ownChunk, seeds))
-      }
-    }
+      },
+      init, combine, (_, c, seeds) => applyChunk(c, seeds))
     val newVars = template.vars.flatMap { case (n, vs) =>
       if (!vs.dims.contains(d)) Seq(n -> vs)
       else Seq(
@@ -3620,11 +3543,11 @@ final class XbeamDataset private (
   /** Linear interpolation across NaN runs along `dim` (xarray
     * `interpolate_na(dim, method='linear')`): each NaN position between
     * two valid values takes the straight line through its nearest valid
-    * neighbors; leading/trailing NaNs stay NaN. Distributed as TWO of
-    * the [[cumsum]]-style sliver scans — a forward pass carrying each
-    * chunk's last (value, index) and a reverse pass carrying its first
-    * — then one co-partitioned rejoin interpolates chunk-locally.
-    * Chunk bodies cross the wire once; everything else is slivers. */
+    * neighbors; leading/trailing NaNs stay NaN. Distributed as two
+    * [[cumsum]]-style scans of (value, global index) slivers
+    * ([[laneScanBothWays]]) — a forward one carrying each chunk's last
+    * valid position per lane and a reverse one carrying its first —
+    * after which every chunk interpolates locally. */
   def interpolateNa(dim: String): XbeamDataset =
     interpolateNa(dim, Double.PositiveInfinity)
 
@@ -3637,93 +3560,17 @@ final class XbeamDataset private (
   def interpolateNa(dim: String, maxGap: Double): XbeamDataset = {
     require(template.dimSizes.contains(dim), s"unknown dim $dim")
     require(maxGap > 0, s"max_gap must be positive, got $maxGap")
-    import ChunkTransforms.pairEnc
-    import org.apache.spark.sql.Encoders
-    implicit val taggedEnc = Encoders.kryo[(String, Int, Pair)]
-    implicit val edgeEnc = Encoders.kryo[(ChunkKey, ArrayChunk, ArrayChunk)]
     val d = dim
-    // ONE pass computes BOTH per-chunk stacked (value, global index)
-    // edge slivers, cached as a small disk-spillable RDD (sliver bytes
-    // = data / chunk extent; auto-cleaned by the ContextCleaner): the
-    // forward and reverse scans then derive from the cache, so the
-    // source is read once for slivers + once for the rejoin — two
-    // passes total instead of three
-    val nanInit: Array[Int] => NdArray =
-      shape => NdArray.fill(DType.F64, shape, Double.NaN)
-    val edgesDs = chunkDataset.map { p: Pair =>
-      val (k, c) = p
-      val off = k.offsets.getOrElse(d, 0L)
-      def sliver(last: Boolean) = ArrayChunk(c.vars.collect {
-        case (n, va) if va.dims.contains(d) =>
+    val joined = laneScanBothWays(d) { (key, c, prev, next) =>
+      val off = key.offsets.getOrElse(d, 0L)
+      ArrayChunk(c.vars.map { case (n, va) =>
+        if (!va.dims.contains(d)) n -> va
+        else {
           val ax = va.dims.indexOf(d)
-          n -> VarArray("__s" +: va.dims.filterNot(_ == d),
-            va.arr.edgeValidWithIndexAlong(ax, off, last))
+          n -> VarArray(va.dims,
+            va.arr.interpNaAlong(ax, off, prev.get(n), next.get(n), maxGap))
+        }
       })
-      (k, sliver(last = true), sliver(last = false))
-    }.filter { t: (ChunkKey, ArrayChunk, ArrayChunk) => t._2.vars.nonEmpty }
-    // overwrite-if-present on the stacked pair: a later sliver's value
-    // plane decides; its index plane travels with it — the
-    // exclusive-prefix "nearest valid so far" per lane-chunk
-    val joined = if (scanSeedBytes(d, stackK = 4) <= scanSeedBroadcastBytes) {
-      // both directions' seeds fit the broadcast guard: collect the
-      // edge slivers once, fold both driver-side exclusive scans, and
-      // apply in a narrow map — chunk bodies never cross the wire
-      val collected = edgesDs.collect()
-      val bcF = spark.sparkContext.broadcast(XbeamDataset.driverScanSeeds(
-        collected.map(t => (t._1, t._2)), d, reverse = false,
-        nanInit, XbeamDataset.overwritePair))
-      val bcR = spark.sparkContext.broadcast(XbeamDataset.driverScanSeeds(
-        collected.map(t => (t._1, t._3)), d, reverse = true,
-        nanInit, XbeamDataset.overwritePair))
-      chunkDataset.map { p: Pair =>
-        val (key, ownChunk) = p
-        val prev = bcF.value.getOrElse(key.canonical, Map.empty[String, NdArray])
-        val next = bcR.value.getOrElse(key.canonical, Map.empty[String, NdArray])
-        val off = key.offsets.getOrElse(d, 0L)
-        (key, ArrayChunk(ownChunk.vars.map { case (n, va) =>
-          if (!va.dims.contains(d)) n -> va
-          else {
-            val ax = va.dims.indexOf(d)
-            n -> VarArray(va.dims,
-              va.arr.interpNaAlong(ax, off, prev.get(n), next.get(n), maxGap))
-          }
-        }))
-      }
-    } else {
-      // ONE pass computes BOTH directions' edge slivers, cached as a
-      // small disk-spillable RDD (sliver bytes = data / chunk extent;
-      // auto-cleaned by the ContextCleaner): the forward and reverse
-      // scans derive from the cache, so the source is read once for
-      // slivers + once for the rejoin
-      val edges = edgesDs
-        .rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      def prefixes(parts: Dataset[Pair], reverse: Boolean): Dataset[Pair] =
-        lanePrefixes(parts, d, reverse, nanInit, XbeamDataset.overwritePair)
-      val fwd = prefixes(
-        spark.createDataset(edges.map(t => (t._1, t._2)))(pairEnc), reverse = false)
-      val rev = prefixes(
-        spark.createDataset(edges.map(t => (t._1, t._3)))(pairEnc), reverse = true)
-      val tagged = chunkDataset.map { p: Pair => (p._1.canonical, 0, p) }
-        .union(fwd.map { p: Pair => (p._1.canonical, 1, p) })
-        .union(rev.map { p: Pair => (p._1.canonical, 2, p) })
-      tagged.groupByKey(_._1)(Encoders.STRING).mapGroups { (_, it) =>
-        val items = it.toSeq
-        val (key, ownChunk) = items.find(_._2 == 0).get._3
-        val prevVars = items.find(_._2 == 1).map(_._3._2.vars)
-          .getOrElse(Map.empty[String, VarArray])
-        val nextVars = items.find(_._2 == 2).map(_._3._2.vars)
-          .getOrElse(Map.empty[String, VarArray])
-        val off = key.offsets.getOrElse(d, 0L)
-        (key, ArrayChunk(ownChunk.vars.map { case (n, va) =>
-          if (!va.dims.contains(d)) n -> va
-          else {
-            val ax = va.dims.indexOf(d)
-            n -> VarArray(va.dims, va.arr.interpNaAlong(ax, off,
-              prevVars.get(n).map(_.arr), nextVars.get(n).map(_.arr),
-              maxGap))
-          }
-        }))
-      }
     }
     val newTemplate = template.copy(vars = template.vars.map { case (n, vs) =>
       n -> VarSpec(vs.dims, if (vs.dims.contains(dim)) DType.F64 else vs.dtype)
@@ -5167,66 +5014,15 @@ final class XbeamDataset private (
     withPlan(newTemplate, chunkSizes + (d -> outChunk), splitVars, outDs)
   }
 
-  /** FUSED short-lane scan: ONE shuffle of chunk bodies partitioned by
-    * lane with a secondary sort on scan position; the per-lane
-    * streaming fold computes each chunk's exclusive prefix sliver on
-    * the fly (`sliverVars`) and applies it immediately (`apply`) — the
-    * source is read once, and there is no separate sliver shuffle and
-    * no prefix rejoin. Bit-identical to the staged [[lanePrefixes]]
-    * sequential path (the same left fold in the same order). One chunk
-    * plus one sliver per lane is resident per task; everything else
-    * streams through Spark's external sort. Used by the cumulative-op
-    * family when lanes are at most `spark.graft.scan.longLaneThreshold`
-    * chunks — longer lanes take the staged two-level scan, which keeps
-    * O(sqrt n) parallelism at the cost of the rejoin. ([[interpolateNa]]
-    * always stays staged: its forward and reverse scans would need two
-    * opposite chunk-body sorts fused, which costs more than its two
-    * sliver scans.) */
-  private def scanChunksAlong(d: String): Long = {
+  /** Plan-time upper bound on the bytes of one lane along `d`: the
+    * chunk count along `d` × one full-size chunk of every variable. */
+  private def scanLaneBytes(d: String): Long = {
     val chunkLen = chunkSizes(d).toLong
-    (template.dimSizes(d) + chunkLen - 1) / chunkLen
-  }
-
-  private def scanLongLaneThreshold: Long =
-    spark.conf.get("spark.graft.scan.longLaneThreshold", "64").toLong
-
-  /** Whether one whole lane of chunk bodies may stream through a single
-    * task: the fused path serializes a lane per task, which is the
-    * right trade when lanes are many (the normal big-data geometry —
-    * scanning a short dim of a wide store yields totalChunks/nChunks
-    * lanes, far more than any cluster's cores) but not for a few-lane
-    * giant dataset. The bound is plan-time exact:
-    * nChunks × chunkBytes <= `spark.graft.scan.fusedMaxLaneBytes`
-    * (default 4 GiB). Over it, the staged sliver path keeps per-chunk
-    * parallelism in the compute/apply stages. */
-  private def fusedLaneFits(d: String, nChunks: Long): Boolean = {
+    val nChunks = (template.dimSizes(d) + chunkLen - 1) / chunkLen
     val chunkElems = template.dimOrder.map { dd =>
       math.min(chunkSizes(dd).toLong, template.dimSizes(dd))
     }.product
-    val laneBytes = nChunks * chunkElems * template.combinedItemsize(splitVars)
-    val cap = spark.conf
-      .get("spark.graft.scan.fusedMaxLaneBytes", (4L << 30).toString).toLong
-    laneBytes <= cap
-  }
-
-  /** Scan routing: take the fused single-shuffle path when a whole lane
-    * may stream through one task. Two ways in, both under the
-    * `fusedMaxLaneBytes` cap: lanes SHORT in chunks (≤
-    * `longLaneThreshold` — the many-lanes geometry), or lanes SMALL in
-    * bytes (≤ `fusedSmallLaneBytes`, default 256 MB) regardless of
-    * chunk count — a 125-chunk lane of 4 KB chunks is half a megabyte,
-    * and serializing its fold costs less than any staged alternative.
-    * Everything else (the pancake regime: thousands of chunks ×
-    * multi-MB cross-sections) stages through sliver scans. */
-  private def scanRouteFused(d: String, nChunks: Long): Boolean = {
-    val small = spark.conf
-      .get("spark.graft.scan.fusedSmallLaneBytes", (256L << 20).toString).toLong
-    val chunkElems = template.dimOrder.map { dd =>
-      math.min(chunkSizes(dd).toLong, template.dimSizes(dd))
-    }.product
-    val laneBytes = nChunks * chunkElems * template.combinedItemsize(splitVars)
-    fusedLaneFits(d, nChunks) &&
-      (nChunks <= scanLongLaneThreshold || laneBytes <= small)
+    nChunks * chunkElems * template.combinedItemsize(splitVars)
   }
 
   /** Plan-time upper bound on the total bytes of every per-chunk scan
@@ -5249,60 +5045,124 @@ final class XbeamDataset private (
     totalChunks * sliverBytes * stackK
   }
 
-  private def scanSeedBroadcastBytes: Long =
-    spark.conf.get("spark.graft.scan.seedBroadcastBytes",
-      (128L << 20).toString).toLong
+  /** Whether a scan's seeds may be collected and broadcast: they fit
+    * the session's `spark.sql.autoBroadcastJoinThreshold` (with
+    * broadcast disabled, -1, nothing fits). */
+  private def seedsBroadcast(d: String, stackK: Int): Boolean =
+    scanSeedBytes(d, stackK) <= spark.sessionState.conf.autoBroadcastJoinThreshold
 
-  /** Finish a staged scan: hand every chunk its EXCLUSIVE lane prefix
-    * and apply. Two shapes, chosen by the plan-time seed size:
-    *
-    *  - seeds fit `spark.graft.scan.seedBroadcastBytes` (128 MB
-    *    default): collect the partial slivers, fold the exclusive
-    *    prefixes on the DRIVER in the same left-fold order as the
-    *    distributed engine (bit-identical by construction), broadcast
-    *    the seed map, and apply in a narrow map — chunk bodies never
-    *    cross the wire. The source is evaluated once for slivers and
-    *    once for the seeded apply; for shuffled inputs the second pass
-    *    reuses the shuffle files (stage skip), for store scans it is a
-    *    second read — the price of zero body shuffle. This is the
-    *    normal regime: seed state is data ÷ chunk extent along `d`.
-    *  - over the guard (the ERA5 pancake regime: ~25k time chunks ×
-    *    8 MB cross-sections ≈ 200 GB of scan state,
-    *    examples/README.md:10-28): slivers scan through the
-    *    distributed [[lanePrefixes]] engine (one resident sliver per
-    *    task) and prefixes co-partition with their chunks in one
-    *    chunk-body shuffle. */
-  private def seedStagedApply(
-      partials: Dataset[Pair], dim: String, reverse: Boolean,
+  /** The lane scan of the cumulative family: every chunk gets the
+    * EXCLUSIVE prefix of the per-lane slivers (`sliverVars`) of the
+    * chunks before it in scan order (`reverse` scans from the end of
+    * `dim`), folded left from `init` with `combine`, and `apply`
+    * finishes the chunk with it (a lane's first chunk gets `init`).
+    * Two routes, both the same left fold in the same order, so the
+    * output bits never depend on the route:
+    *  - [[fusedLaneScan]], one lane-sorted shuffle of chunk bodies,
+    *    when a lane fits the session's
+    *    `spark.sql.adaptive.advisoryPartitionSizeInBytes` (one task's
+    *    worth of data), or when the seeds (`stackK` F64 planes per
+    *    sliver, [[scanSeedBytes]]) do not fit [[seedsBroadcast]];
+    *  - otherwise driver-seeded: collect the slivers, fold the seeds on
+    *    the driver ([[XbeamDataset.driverScanSeeds]]), broadcast them
+    *    and apply in a narrow map. Chunk bodies never move and every
+    *    chunk keeps its own task; the source is evaluated twice (once
+    *    for the slivers, once for the seeded apply).
+    * Both bounds are only read; the library never sets them. */
+  private def laneScan(dim: String, reverse: Boolean, stackK: Int)(
+      sliverVars: (ChunkKey, ArrayChunk) => Map[String, VarArray],
       init: Array[Int] => NdArray,
-      combine: (NdArray, NdArray) => NdArray, stackK: Int)(
-      apply: (ChunkKey, ArrayChunk, Map[String, NdArray]) => Pair): Dataset[Pair] = {
-    import org.apache.spark.sql.Encoders
-    val d = dim
-    val rev = reverse
-    if (scanSeedBytes(d, stackK) <= scanSeedBroadcastBytes) {
-      val seeds = XbeamDataset.driverScanSeeds(
-        partials.collect(), d, rev, init, combine)
-      val bc = spark.sparkContext.broadcast(seeds)
+      combine: (NdArray, NdArray) => NdArray,
+      apply: (ChunkKey, ArrayChunk, Map[String, NdArray]) => ArrayChunk): Dataset[Pair] = {
+    val advisory = spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    if (scanLaneBytes(dim) <= advisory || !seedsBroadcast(dim, stackK))
+      fusedLaneScan(dim, reverse)(sliverVars, init, combine, apply)
+    else {
+      val partials = chunkDataset.map { p: Pair =>
+        (p._1, ArrayChunk(sliverVars(p._1, p._2)))
+      }.filter { p: Pair => p._2.vars.nonEmpty }.collect()
+      val bc = spark.sparkContext.broadcast(XbeamDataset.driverScanSeeds(
+        partials, dim, reverse, init, combine))
       chunkDataset.map { p: Pair =>
-        apply(p._1, p._2, bc.value.getOrElse(p._1.canonical,
-          Map.empty[String, NdArray]))
-      }
-    } else {
-      implicit val taggedEnc = Encoders.kryo[(String, Boolean, Pair)]
-      val prefixes = lanePrefixes(partials, d, rev, init, combine)
-      val tagged = chunkDataset.map { p: Pair => (p._1.canonical, false, p) }
-        .union(prefixes.map { p: Pair => (p._1.canonical, true, p) })
-      tagged.groupByKey(_._1)(Encoders.STRING).mapGroups { (_, it) =>
-        val items = it.toSeq
-        val (key, ownChunk) = items.find(!_._2).get._3
-        val prefixVars = items.find(_._2).map(_._3._2.vars)
-          .getOrElse(Map.empty[String, VarArray])
-        apply(key, ownChunk, prefixVars.map { case (n, va) => n -> va.arr })
+        (p._1, apply(p._1, p._2,
+          bc.value.getOrElse(p._1.canonical, Map.empty[String, NdArray])))
       }
     }
   }
 
+  /** The two-direction lane scan of [[interpolateNa]]: `apply` gets each
+    * chunk's exclusive forward prefix of the last-valid (value, index)
+    * slivers (`prev`) and its exclusive reverse prefix of the
+    * first-valid ones (`next`), both folded by overwrite-if-present.
+    * When both directions' seeds fit [[seedsBroadcast]], one collect of
+    * both slivers feeds two driver folds and `apply` runs in a narrow
+    * map. Above the bound, two [[fusedLaneScan]]s: a forward one that
+    * stashes each chunk's `prev` beside its variables, then a reverse
+    * one that applies. Either way, the same two left folds. */
+  private def laneScanBothWays(d: String)(
+      apply: (ChunkKey, ArrayChunk, Map[String, NdArray],
+        Map[String, NdArray]) => ArrayChunk): Dataset[Pair] = {
+    val nanInit: Array[Int] => NdArray =
+      shape => NdArray.fill(DType.F64, shape, Double.NaN)
+    val lastOf = edgeSlivers(d, last = true)
+    val firstOf = edgeSlivers(d, last = false)
+    if (seedsBroadcast(d, stackK = 4)) {
+      implicit val edgeEnc = Encoders.kryo[(ChunkKey, ArrayChunk, ArrayChunk)]
+      val edges = chunkDataset.map { p: Pair =>
+        (p._1, ArrayChunk(lastOf(p._1, p._2)), ArrayChunk(firstOf(p._1, p._2)))
+      }.filter { t: (ChunkKey, ArrayChunk, ArrayChunk) => t._2.vars.nonEmpty }
+        .collect()
+      val bcF = spark.sparkContext.broadcast(XbeamDataset.driverScanSeeds(
+        edges.map(t => (t._1, t._2)), d, reverse = false,
+        nanInit, XbeamDataset.overwritePair))
+      val bcR = spark.sparkContext.broadcast(XbeamDataset.driverScanSeeds(
+        edges.map(t => (t._1, t._3)), d, reverse = true,
+        nanInit, XbeamDataset.overwritePair))
+      chunkDataset.map { p: Pair =>
+        val none = Map.empty[String, NdArray]
+        (p._1, apply(p._1, p._2, bcF.value.getOrElse(p._1.canonical, none),
+          bcR.value.getOrElse(p._1.canonical, none)))
+      }
+    } else {
+      val stash = "__prev__"
+      val stashed = fusedLaneScan(d, reverse = false)(
+        lastOf, nanInit, XbeamDataset.overwritePair,
+        (_, c, prev) => ArrayChunk(c.vars ++ prev.map { case (n, s) =>
+          (stash + n) -> VarArray("__s" +: c.vars(n).dims.filterNot(_ == d), s)
+        }))
+      withPlan(template, chunkSizes, splitVars, stashed)
+        .fusedLaneScan(d, reverse = true)(
+          firstOf, nanInit, XbeamDataset.overwritePair, (k, c, next) => {
+            val (prev, own) = c.vars.partition(_._1.startsWith(stash))
+            apply(k, ArrayChunk(own),
+              prev.map { case (n, va) => n.stripPrefix(stash) -> va.arr }, next)
+          })
+    }
+  }
+
+  /** Per-lane stacked (value, global index) sliver of each chunk's last
+    * (`last`) or first valid position along `d` — the scan state of the
+    * limited fills and [[interpolateNa]]. */
+  private def edgeSlivers(d: String, last: Boolean)
+      : (ChunkKey, ArrayChunk) => Map[String, VarArray] =
+    (k, c) => {
+      val off = k.offsets.getOrElse(d, 0L)
+      c.vars.collect {
+        case (n, va) if va.dims.contains(d) =>
+          n -> VarArray("__s" +: va.dims.filterNot(_ == d),
+            va.arr.edgeValidWithIndexAlong(va.dims.indexOf(d), off, last))
+      }
+    }
+
+  /** [[laneScan]]'s fused route: ONE shuffle of chunk bodies
+    * partitioned by lane with a secondary sort on scan position; the
+    * per-lane streaming fold computes each chunk's exclusive prefix on
+    * the fly from the slivers of the chunks before it (`sliverVars`)
+    * and applies it immediately (`apply`) — the source is read once,
+    * and there is no separate sliver shuffle. One chunk plus one
+    * sliver per lane is resident per task; everything else streams
+    * through Spark's external sort, and a lane runs in one task. */
   private def fusedLaneScan(dim: String, reverse: Boolean)(
       sliverVars: (ChunkKey, ArrayChunk) => Map[String, VarArray],
       init: Array[Int] => NdArray,
@@ -5336,209 +5196,31 @@ final class XbeamDataset private (
       }(pairEnc)
   }
 
-  /** Streaming exclusive prefix of per-chunk slivers along `dim` — the
-    * STAGED scan engine: long lanes of the [[cumsum]]/[[ffill]]/
-    * [[bfill]]/[[cummax]]/[[cummin]]/[[cumulativeIntegrate]] family and
-    * the limited fills (short lanes take [[fusedLaneScan]]), plus both
-    * directions of [[interpolateNa]] at any length. Slivers shuffle
-    * once on their lane key with a
-    * SECONDARY SORT on scan position (repartition + sortWithinPartitions
-    * — Spark's external sort spills to disk), then fold STREAMING inside
-    * each partition, so one sliver plus the accumulator is resident per
-    * task no matter how long the lane. A pancake-chunked store scanned
-    * along its long dim (the reference's flagship ERA5 layout,
-    * examples/README.md:10-28: `(31,721,1440)` chunks along `time` →
-    * ~11k slivers x ~8 MB per lane) spills through the sort, never
-    * through the fold.
-    *
-    * Lanes longer than `spark.graft.scan.longLaneThreshold` chunks
-    * (default 64) switch to the classic two-level scan: one pass emits
-    * block-local exclusive prefixes AND per-block totals (blocks of
-    * ~sqrt(n) chunks), a lane-level scan over the block totals yields
-    * each block's seed, and a final streaming merge folds the seed in
-    * front of every block-local prefix — O(sqrt(n)) parallel blocks
-    * instead of one serial lane walk, still one resident sliver per
-    * task. The two-level path reassociates `combine` across block
-    * boundaries: bit-identical for exactly-associative monoids (the
-    * overwrite fills, cummax/cummin) and for integer-valued sums; a
-    * float cumsum may differ from the sequential path by
-    * reassociation ULPs. */
-  private def lanePrefixes(partials: Dataset[Pair], dim: String,
-                           reverse: Boolean,
-                           init: Array[Int] => NdArray,
-                           combine: (NdArray, NdArray) => NdArray): Dataset[Pair] = {
-    import org.apache.spark.sql.functions.col
-    // real (group, ord) columns so the repartition + secondary sort run
-    // without touching the kryo payloads; lane and block are SEPARATE
-    // sort columns (a string + a long, no concatenated keys)
-    implicit val scanEnc: org.apache.spark.sql.Encoder[(String, Long, Pair)] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong, pairEnc)
-    implicit val blockEnc: org.apache.spark.sql.Encoder[(String, Long, Long, Boolean, Pair)] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaBoolean, pairEnc)
-    val d = dim
-    val rev = reverse
-    val chunkLen = chunkSizes(d).toLong
-    val nChunks = (template.dimSizes(d) + chunkLen - 1) / chunkLen
-    val nC = nChunks
-    val laneOf = (k: ChunkKey) => k.copy(offsets = k.offsets - d).canonical
-    val ordOf = (k: ChunkKey) =>
-      if (rev) -k.offsets.getOrElse(d, 0L) else k.offsets.getOrElse(d, 0L)
-
-    // Exclusive scan per contiguous sorted group: the accumulator starts
-    // at the monoid identity and each row emits it BEFORE folding
-    // itself in.
-    def scanSorted(keyed: Dataset[(String, Long, Pair)])
-        : Dataset[(String, Long, Pair)] =
-      keyed.repartition(col("_1"))
-        .sortWithinPartitions(col("_1"), col("_2"))
-        .mapPartitions { rows =>
-          var group: String = null
-          var acc: Map[String, VarArray] = null
-          rows.map { case (g, ord, (k, sliver)) =>
-            if (g != group) { group = g; acc = null }
-            if (acc == null)
-              acc = sliver.vars.map { case (n, va) =>
-                n -> VarArray(va.dims, init(va.arr.shape)) }
-            val cur = acc
-            acc = acc.map { case (n, va) =>
-              n -> VarArray(va.dims, combine(va.arr, sliver.vars(n).arr)) }
-            (g, ord, (k, ArrayChunk(cur)))
-          }
-        }
-
-    val threshold = spark.conf.get("spark.graft.scan.longLaneThreshold", "64").toLong
-    if (nChunks <= threshold) {
-      scanSorted(partials.map { p: Pair => (laneOf(p._1), ordOf(p._1), p) })
-        .map { r: (String, Long, Pair) => r._3 }
-    } else {
-      val blockSize = math.max(2L, math.ceil(math.sqrt(nChunks.toDouble)).toLong)
-      val blockOf = (k: ChunkKey) => {
-        val idx = k.offsets.getOrElse(d, 0L) / chunkLen
-        (if (rev) nC - 1 - idx else idx) / blockSize
-      }
-      // pass 1: per (lane, block) — streaming block-local exclusive
-      // prefixes, plus each finished block's total re-keyed to the lane
-      // (tag=true) for the level-2 scan
-      val localsAndTotals = partials
-        .map { p: Pair => (laneOf(p._1), blockOf(p._1), ordOf(p._1), false, p) }
-        .repartition(col("_1"), col("_2"))
-        .sortWithinPartitions(col("_1"), col("_2"), col("_3"))
-        .mapPartitions { rows =>
-          val buf = rows.buffered
-          new Iterator[(String, Long, Long, Boolean, Pair)] {
-            private var lane: String = null
-            private var block: Long = -1L
-            private var acc: Map[String, VarArray] = null
-            private var pendingTotal: (String, Long, Long, Boolean, Pair) = null
-            def hasNext: Boolean = pendingTotal != null || buf.hasNext
-            def next(): (String, Long, Long, Boolean, Pair) = {
-              if (pendingTotal != null) {
-                val r = pendingTotal; pendingTotal = null; return r
-              }
-              val (g, b, ord, _, (k, sliver)) = buf.next()
-              if (g != lane || b != block) { lane = g; block = b; acc = null }
-              if (acc == null)
-                acc = sliver.vars.map { case (n, va) =>
-                  n -> VarArray(va.dims, init(va.arr.shape)) }
-              val cur = acc
-              acc = acc.map { case (n, va) =>
-                n -> VarArray(va.dims, combine(va.arr, sliver.vars(n).arr)) }
-              if (!buf.hasNext || buf.head._1 != g || buf.head._2 != b)
-                pendingTotal = (g, b, 0L, true, (k, ArrayChunk(acc)))
-              (g, b, ord, false, (k, ArrayChunk(cur)))
-            }
-          }
-        }
-      // pass 1 feeds two branches (locals → pass 3, totals → pass 2):
-      // persist it as an RDD (spills to disk, auto-cleaned by the
-      // ContextCleaner once unreferenced) so the post-shuffle sort read
-      // and the O(n) streaming fold run ONCE, not once per branch
-      val cached = localsAndTotals.rdd
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val locals = spark.createDataset(cached.filter(r => !r._4))(blockEnc)
-      val totals = spark.createDataset(cached.filter(r => r._4))(blockEnc)
-      // pass 2: scan the ~sqrt(n) block totals per lane → block seeds,
-      // re-keyed ahead of every real scan position (MinValue)
-      val seeds = scanSorted(
-          totals.map { r: (String, Long, Long, Boolean, Pair) => (r._1, r._2, r._5) })
-        .map { r: (String, Long, Pair) =>
-          (r._1, r._2, Long.MinValue, true, r._3) }
-      // pass 3: streaming merge — hold the block's seed, fold it in
-      // front of each block-local prefix
-      locals.union(seeds)
-        .repartition(col("_1"), col("_2"))
-        .sortWithinPartitions(col("_1"), col("_2"), col("_3"))
-        .mapPartitions { rows =>
-          var lane: String = null
-          var block: Long = -1L
-          var seed: Map[String, VarArray] = null
-          rows.flatMap { case (g, b, _, isSeed, (k, c)) =>
-            if (g != lane || b != block) { lane = g; block = b; seed = null }
-            if (isSeed) { seed = c.vars; Iterator.empty }
-            else if (seed == null) Iterator.single((k, c))
-            else Iterator.single((k, ArrayChunk(c.vars.map { case (n, va) =>
-              n -> VarArray(va.dims, combine(seed(n).arr, va.arr)) })))
-          }
-        }(pairEnc)
-    }
-  }
-
-  /** The generic distributed prefix scan along `dim` backing [[cumsum]]
-    * and [[ffill]]: (1) each chunk reduces to a per-lane sliver via
-    * `sliverOf`; (2) slivers scan to an EXCLUSIVE prefix per chunk in
-    * dim order through [[lanePrefixes]] — tiny, one sliver per (chunk,
-    * lane), one resident sliver per task; (3) prefixes rejoin their
-    * chunks co-partitioned and `applySeed` finishes each chunk locally.
-    * Chunk bodies cross the wire once; scan state is always the reduced
-    * sliver. Variables not spanning `dim` pass through unchanged;
-    * outputs are F64. */
+  /** [[laneScan]] for a per-variable monoid (the [[cumsum]] family):
+    * `sliverOf` reduces a chunk to its lane-shaped sliver, `applySeed`
+    * runs the chunk's own scan from its incoming prefix. Variables not
+    * spanning `dim` pass through unchanged; outputs are F64. */
   private def prefixScanAlong(dim: String, reverse: Boolean = false)(
       sliverOf: (NdArray, Int) => NdArray,
       init: Array[Int] => NdArray,
       combine: (NdArray, NdArray) => NdArray,
       applySeed: (NdArray, Int, Option[NdArray]) => NdArray): XbeamDataset = {
     require(template.dimSizes.contains(dim), s"unknown dim $dim")
-    import ChunkTransforms.pairEnc
-    import org.apache.spark.sql.Encoders
     val d = dim
-    val nChunks = scanChunksAlong(d)
-    val out = if (scanRouteFused(d, nChunks)) {
-      // short lanes: one fused chunk-body shuffle, no sliver stages
-      fusedLaneScan(d, reverse)(
-        (_, c) => c.vars.collect {
-          case (n, va) if va.dims.contains(d) =>
-            val ax = va.dims.indexOf(d)
-            n -> VarArray(va.dims.filterNot(_ == d), sliverOf(va.arr, ax))
-        },
-        init, combine,
-        (_, c, seeds) => ArrayChunk(c.vars.map { case (n, va) =>
-          if (!va.dims.contains(d)) n -> va
-          else {
-            val ax = va.dims.indexOf(d)
-            n -> VarArray(va.dims, applySeed(va.arr, ax, seeds.get(n)))
-          }
-        }))
-    } else {
-      val partials = chunkDataset.map { p: Pair =>
-        val (k, c) = p
-        (k, ArrayChunk(c.vars.collect {
-          case (n, va) if va.dims.contains(d) =>
-            val ax = va.dims.indexOf(d)
-            n -> VarArray(va.dims.filterNot(_ == d), sliverOf(va.arr, ax))
-        }))
-      }.filter { p: Pair => p._2.vars.nonEmpty }
-      seedStagedApply(partials, d, reverse, init, combine, stackK = 1) {
-        (key, ownChunk, seeds) =>
-          (key, ArrayChunk(ownChunk.vars.map { case (n, va) =>
-            if (!va.dims.contains(d)) n -> va
-            else {
-              val ax = va.dims.indexOf(d)
-              n -> VarArray(va.dims, applySeed(va.arr, ax, seeds.get(n)))
-            }
-          }))
-      }
-    }
+    val out = laneScan(d, reverse, stackK = 1)(
+      (_, c) => c.vars.collect {
+        case (n, va) if va.dims.contains(d) =>
+          val ax = va.dims.indexOf(d)
+          n -> VarArray(va.dims.filterNot(_ == d), sliverOf(va.arr, ax))
+      },
+      init, combine,
+      (_, c, seeds) => ArrayChunk(c.vars.map { case (n, va) =>
+        if (!va.dims.contains(d)) n -> va
+        else {
+          val ax = va.dims.indexOf(d)
+          n -> VarArray(va.dims, applySeed(va.arr, ax, seeds.get(n)))
+        }
+      }))
     val newTemplate = template.copy(vars = template.vars.map { case (n, vs) =>
       n -> VarSpec(vs.dims, if (vs.dims.contains(dim)) DType.F64 else vs.dtype)
     })
@@ -6571,17 +6253,12 @@ object XbeamDataset {
       calTags)
   }
 
-  /** In-memory entry for tests (from_xarray, dataset.py:624-660). */
-  /** Overwrite-if-present combine for stacked [2]++lane (value, index)
-    * slivers: where the sliver's value plane is present it wins and its
-    * index travels with it — the scan-prefix monoid shared by
-    * interpolateNa and the limited fills. */
   /** Driver-side exclusive prefix fold over collected partial slivers —
-    * the broadcast-seed scan path: group by lane (key minus `d`), sort
-    * by scan position, left-fold with the SAME (init, combine) as the
-    * distributed engine, emitting each chunk's accumulator BEFORE its
-    * own sliver folds in. Bit-identical to [[lanePrefixes]]'s
-    * sequential path by construction. */
+    * [[laneScan]]'s driver-seeded route: group by lane (key minus `d`),
+    * sort by scan position, and left-fold from `init` with `combine`,
+    * keying each chunk's accumulator as it stands BEFORE its own sliver
+    * folds in (a lane's first chunk gets `init`), exactly as
+    * [[laneScan]]'s fused route hands it to `apply`. */
   private[api] def driverScanSeeds(
       partials: Array[(ChunkKey, ArrayChunk)], d: String, reverse: Boolean,
       init: Array[Int] => NdArray,
@@ -6604,6 +6281,10 @@ object XbeamDataset {
     out.result()
   }
 
+  /** Overwrite-if-present combine for stacked [2]++lane (value, index)
+    * slivers: where the sliver's value plane is present it wins and its
+    * index travels with it — the scan-prefix monoid shared by
+    * interpolateNa and the limited fills. */
   private[api] def overwritePair(acc: NdArray, sliver: NdArray): NdArray = {
     val out = NdArray.zeros(DType.F64, acc.shape)
     val laneSize = acc.size / 2
@@ -6622,6 +6303,7 @@ object XbeamDataset {
     out
   }
 
+  /** In-memory entry for tests (from_xarray, dataset.py:624-660). */
   def fromLocal(spark: SparkSession, vars: Map[String, (Seq[String], NdArray)],
                 coords: Map[String, NdArray] = Map.empty,
                 chunks: Map[String, Int] = Map.empty,

@@ -1,16 +1,10 @@
 package graft.core
 
-import graft.ndarray.{DType, NdArray}
+import graft.ndarray.NdArray
 
 /** One data variable inside a chunk: its dimension names (in axis order)
   * and the dense block. The JVM stand-in for one xarray.DataArray. */
-final case class VarArray(dims: Seq[String], arr: NdArray) {
-  def shapeOf(dim: String): Int = {
-    val i = dims.indexOf(dim)
-    require(i >= 0, s"dim $dim not in $dims")
-    arr.shape(i)
-  }
-}
+final case class VarArray(dims: Seq[String], arr: NdArray)
 
 /** An in-memory chunk: a set of named variables over named dimensions —
   * the stand-in for the xarray.Dataset payloads flowing through the

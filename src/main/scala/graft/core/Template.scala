@@ -33,16 +33,6 @@ final case class Template(dims: Seq[(String, Long)],
   def dimSizes: Map[String, Long] = dims.toMap
   def dimOrder: Seq[String] = dims.map(_._1)
 
-  def withVar(name: String, spec: VarSpec): Template =
-    copy(vars = vars + (name -> spec))
-
-  def dropDims(remove: Set[String]): Template =
-    Template(
-      dims.filterNot(d => remove(d._1)),
-      vars.map { case (n, vs) => n -> vs.copy(dims = vs.dims.filterNot(remove)) },
-      coords -- remove,
-      attrs)
-
   /** Replace dimension sizes and/or coordinates
     * (replace_template_dims, zarr.py:150-226): a plain size replacement
     * drops the dim's now-stale coordinate; a coordinate replacement
@@ -85,16 +75,4 @@ final case class Template(dims: Seq[(String, Long)],
     if (vars.isEmpty) 1L
     else if (splitVars) vars.valuesIterator.map(_.dtype.itemsize.toLong).max
     else vars.valuesIterator.map(_.dtype.itemsize.toLong).sum
-}
-
-object Template {
-  /** Infer a template from a single consolidated chunk at origin
-    * (legacy template-discovery analogue, zarr.py:242-271). */
-  def fromChunk(chunk: ArrayChunk): Template = {
-    val ds = chunk.dimSizes
-    Template(
-      ds.toSeq.sortBy(_._1).map { case (d, s) => d -> s.toLong },
-      chunk.vars.map { case (n, va) => n -> VarSpec(va.dims, va.arr.dtype) },
-      Map.empty, Map.empty)
-  }
 }

@@ -233,7 +233,6 @@ final case class NdArray(dtype: DType, shape: Array[Int], data: Array[Byte])
     val outShape = keep.map(shape)
     val sums = NdArray.zeros(DType.F64, outShape)
     val counts = NdArray.zeros(DType.F64, outShape)
-    val srcStrides = strides
     val outStrides = sums.strides
     val n = size
     val idx = new Array[Int](ndim)
@@ -2633,7 +2632,7 @@ object NdArray {
     var i = 0
     while (i < m) { if (y(i) > ymax) ymax = y(i); i += 1 }
     if (m < 3 || ymax <= 0) return (Double.NaN, Double.NaN, Double.NaN)
-    var big = 1.05 * ymax
+    val big = 1.05 * ymax
     // logit-linear seed over interior points
     var n = 0.0; var st = 0.0; var st2 = 0.0; var sz = 0.0; var stz = 0.0
     i = 0

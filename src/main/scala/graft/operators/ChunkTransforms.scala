@@ -364,12 +364,8 @@ object ChunkTransforms {
   /** Histogram pass of the approximate quantile: per-chunk partials,
     * ONE keyed shuffle with map-side combine (reduceGroups), extract.
     * Same distributed shape as [[reduceDims]]; the shuffled payload per
-    * kept cell is `bins` doubles, independent of the reduced extent. */
-  def histQuantileReduce(ds: Dataset[Pair], dims: Set[String], q: Double,
-                         bins: Int): Dataset[Pair] =
-    histQuantilesReduce(ds, dims, Seq(q), Seq(""), bins)
-
-  /** Multi-q form: one bounds attach, one fill, one shuffle; each q
+    * kept cell is `bins` doubles, independent of the reduced extent.
+    * One bounds attach, one fill, one shuffle for all of `qs`; each q
     * extracts as `<var><suffix>`. */
   def histQuantilesReduce(ds: Dataset[Pair], dims: Set[String],
                           qs: Seq[Double], suffixes: Seq[String],

@@ -157,16 +157,6 @@ object RechunkPlanner {
         s"min_mem=$minMem max_mem=$maxMem")
   }
 
-  /** Single-stage wrapper (rechunker_algorithm.py:352-388). */
-  def singleStagePlan(shape: Vector[Long], sourceChunks: Vector[Long],
-                      targetChunks: Vector[Long], itemsize: Long,
-                      maxMem: Long): Stage = {
-    val plan = multistagePlan(shape, sourceChunks, targetChunks, itemsize,
-      minMem = itemsize, maxMem = maxMem)
-    require(plan.stages.length == 1)
-    plan.stages.head
-  }
-
   /** Dim-name-keyed plan, ordered by `dimOrder` (rechunk.py:62-85). */
   def planForDims(dimOrder: Seq[String], dimSizes: Map[String, Long],
                   source: Map[String, Int], target: Map[String, Int],

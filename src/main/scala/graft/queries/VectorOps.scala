@@ -151,7 +151,6 @@ object VectorOps {
     * dup_of NULL = survivor. See the e09 gate comment for the full
     * scale story. */
   private def semdedupCells(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
         import s.implicits._
         graft.functions.GraftFunctions.register(s)
         val e = t(s, dir, "embeddings")

@@ -708,7 +708,7 @@ object XbeamQueries {
     QueryDef(
       "x21_zarr_append",
       (s, dir) => {
-        import ChunkTransforms.{Pair, pairEnc}
+        import ChunkTransforms.Pair
         import graft.sources.Zarr
         val store = zarrPath("x21", dir)
         val xds = gridXds(s, dir)
@@ -855,18 +855,14 @@ object XbeamQueries {
 
     // ---------------------------------------------------------------- x26
     // Distributed prefix scan: cumulative sum along t. Per-chunk lane
-    // totals (slivers) → exclusive prefix per lane-chunk → co-partitioned
-    // rejoin seeding each chunk's running sum. Oracle: SQL running-sum
-    // window; integer-valued data keeps every partial exact.
-    //
-    // HARNESS PIN (cross-engine exactness): the scan's two-level path
-    // (lanes > spark.graft.scan.longLaneThreshold chunks, default 64)
-    // reassociates float addition across block boundaries, so a
-    // NON-integer cumsum over a >64-chunk lane may differ from the
-    // oracle's sequential window by ULPs. This gate stays hash-exact
-    // because its data is integer-valued AND its lanes are short; any
-    // future float cumulative gate over long lanes must either pin the
-    // threshold above its lane length or compare with a tolerance.
+    // totals (slivers) fold left into an exclusive prefix per
+    // lane-chunk, which seeds each chunk's running sum; the lanes are
+    // short, so the fold runs inside one lane-sorted shuffle. Oracle:
+    // SQL running-sum window. Every scan route folds in the same
+    // order, but chunk-wise sums still group float additions by chunk
+    // (a chunk total joins the prefix before its own elements do), so
+    // the gate's integer-valued data is what keeps it hash-exact
+    // against the oracle's element-by-element window.
     QueryDef(
       "x26_cumsum",
       (s, dir) => TabularBridge.toDataFrame(
@@ -1280,7 +1276,9 @@ object XbeamQueries {
     // Linear interpolation across NaN runs along t (xarray
     // interpolate_na): NaNs injected on the x34 value pattern, then the
     // two-direction sliver scan (forward last-(value,index), reverse
-    // first-(value,index)) and a chunk-local line fill. The oracle
+    // first-(value,index)): both directions' seeds are folded on the
+    // driver from one collect and broadcast, and each chunk fills its
+    // lines in a narrow map, so chunk bodies never shuffle. The oracle
     // mirrors the exact expression pv + (nv-pv)*(t-pt)/(nt-pt) with
     // IGNORE NULLS edge windows, so values are bit-identical;
     // leading/trailing NaNs (one side missing) stay NULL → sentinel.

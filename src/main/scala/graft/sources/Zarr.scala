@@ -6,7 +6,7 @@ import java.util.zip.{Deflater, Inflater}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
-import graft.core.{ArrayChunk, ChunkGrid, ChunkKey, Template, VarArray, VarSpec}
+import graft.core.{Template, VarSpec}
 import graft.ndarray.{DType, NdArray}
 
 /** Zarr store IO, from scratch (no JVM Zarr lib is bundled), v2 and v3:
@@ -1102,8 +1102,6 @@ object Zarr {
     case DType.U8 => "uint8"
     case DType.Bool => "bool"
   }
-
-  private[sources] def dtypeFromV3(s: String): DType = dtypeFromV3Full(s)._1
 
   /** v3 data_type → (kernel dtype, widenFrom): uint16/uint32/float16
     * widen losslessly to i4/i8/f4 on read, mirroring the v2 parse. */

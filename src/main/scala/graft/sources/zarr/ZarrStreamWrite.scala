@@ -5,7 +5,7 @@ import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, Writ
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
 
-import graft.ndarray.{DType, NdArray}
+import graft.ndarray.DType
 import graft.sources.{BlobStore, Zarr}
 
 /** `df.writeStream.format("zarr")` — the streaming half of the DSv2

@@ -146,7 +146,6 @@ object ZarrWrite {
       val isLocal = !path.contains("://") || path.startsWith("file://")
       val p = java.nio.file.Paths.get(bare)
       if (isLocal && java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
         // the recursive delete only ever targets a zarr store (or an
         // empty directory): a mistyped path pointing at arbitrary data
         // must fail loudly, not be wiped

@@ -133,7 +133,7 @@ object StreamOps {
     *
     * The session runs ONE stream: see [[runBounded]]. */
   private def boundedStreamSession(s: SparkSession, inputBytes: Long,
-                                  noDataBatch: Boolean = true): SparkSession = {
+                                  noDataBatch: Boolean): SparkSession = {
     val advisory = s.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     val parts = math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong,
@@ -587,7 +587,6 @@ object StreamOps {
       "s07_stream_zarr_ingest",
       (s, dir) => {
         import graft.api.{TabularBridge, XbeamDataset}
-        import graft.core.{ArrayChunk, ChunkKey}
         import graft.ndarray.DType
         import graft.operators.ChunkTransforms.{Pair, pairEnc}
         val ev = graft.queries.Tables.loadEvents(s, s"$dir/events.parquet")

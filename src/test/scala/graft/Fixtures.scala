@@ -44,6 +44,17 @@ object TestSpark {
     * `mem://` object store, whose namespace is a JVM static — `assume`
     * on this and cancel cleanly in multi-JVM runs. */
   def isMultiJvm: Boolean = spark.sparkContext.master.startsWith("local-cluster")
+
+  /** Run `body` with session confs set, restoring each one's previous
+    * value (or unsetting it) afterwards. */
+  def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try { kvs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 /** Pinned ScalaCheck seed with an env override: every property suite

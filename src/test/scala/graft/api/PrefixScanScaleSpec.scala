@@ -3,35 +3,34 @@ package graft.api
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.TestSpark.withConf
 import graft.ndarray.{DType, NdArray}
 
-/** Scale posture of the shared lane-scan engine (lanePrefixes): the
-  * two-level (block prefixes → scan of block totals → seed merge) path
-  * taken by long lanes must match the sequential streaming fold
-  * bit-for-bit on integer-valued data and exactly-associative monoids,
-  * and a pancake-chunked many-thousand-chunk lane (the ERA5 shape,
-  * reference examples/README.md:10-28) must complete with one resident
-  * sliver per task — the r7 fix for the whole-lane materialization. */
+/** Scale posture of the shared lane scan (laneScan): every route gives
+  * the same bits on gappy data, including interpolateNa's two fused
+  * scans with broadcast disabled, and a pancake-chunked many-thousand-
+  * chunk lane (the ERA5 shape, reference examples/README.md:10-28)
+  * completes on both routes — streaming one chunk plus one sliver per
+  * task through the fused sort, or one seed per chunk from the driver's
+  * fold. */
 class PrefixScanScaleSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
 
-  private val THRESH = "spark.graft.scan.longLaneThreshold"
-  private val SEED = "spark.graft.scan.seedBroadcastBytes"
-  private val SMALL = "spark.graft.scan.fusedSmallLaneBytes"
+  private val ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+  private val BROADCAST = "spark.sql.autoBroadcastJoinThreshold"
 
-  /** Force the DISTRIBUTED staged machinery (lanePrefixes + the
-    * chunk-body rejoin): zero guards declare every lane too big to
-    * fuse byte-wise and every seed map too big to collect — what a
-    * real pancake-chunked lane (~200 GB of scan state) looks like at
-    * plan time. */
-  private def withDistributedSeeds[A](body: => A): A =
-    try { spark.conf.set(SEED, "0"); spark.conf.set(SMALL, "0"); body }
-    finally { spark.conf.unset(SEED); spark.conf.unset(SMALL) }
+  /** No lane fits a 1-byte advisory size: the lane scans take their
+    * driver-seeded route. */
+  private def driverSeeded[A](body: => A): A = withConf(ADVISORY -> "1")(body)
+
+  /** Broadcast disabled as well: no seeds may be broadcast, so every
+    * scan runs fused (interpolateNa as two fused scans). */
+  private def noBroadcast[A](body: => A): A =
+    withConf(ADVISORY -> "1", BROADCAST -> "-1")(body)
 
   /** Integer-valued data with a deterministic NaN pattern so sums are
-    * order-independent (bit-exact under reassociation) and the fill /
-    * interp ops see real gaps. */
+    * order-independent and the fill / interp ops see real gaps. */
   private def gappy(time: Int, x: Int): Map[String, (Seq[String], NdArray)] = {
     val vals = Array.tabulate(time * x) { i =>
       if (i % 7 == 3 || i % 11 == 5) Double.NaN else (i % 97).toDouble
@@ -40,38 +39,16 @@ class PrefixScanScaleSpec extends AnyFunSuite {
       NdArray.fromDoubles(DType.F64, Array(time, x), vals)))
   }
 
-  private def withThreshold[A](n: Int)(body: => A): A =
-    try { spark.conf.set(THRESH, n.toString); body }
-    finally spark.conf.unset(THRESH)
-
   private def ds(time: Int = 64, x: Int = 8,
                  chunks: Map[String, Int] = Map("time" -> 2, "x" -> 4)) =
     XbeamDataset.fromLocal(spark, gappy(time, x), chunks = chunks)
 
-  test("two-level long-lane scan is bit-identical to the sequential fold") {
-    val ops: Seq[XbeamDataset => XbeamDataset] = Seq(
-      _.cumsum("time"), _.ffill("time"), _.bfill("time"),
-      _.cummax("time"), _.cummin("time"), _.interpolateNa("time"),
-      _.ffill("time", limit = 3), _.bfill("time", limit = 2))
-    for (op <- ops) {
-      // 32 chunks along time per lane: sequential below, two-level
-      // (blockSize ~ sqrt(32) = 6, ragged last block) above; the zero
-      // seed guard keeps the distributed engine in play (the default
-      // guard would broadcast these tiny seeds instead)
-      val seq = withThreshold(1000)(op(ds()).collectConsolidated()._2)
-      val two = withDistributedSeeds(
-        withThreshold(8)(op(ds()).collectConsolidated()._2))
-      assert(two.vars("v").arr.sameAs(seq.vars("v").arr))
-    }
-  }
-
-  test("fused, broadcast-staged, and distributed-staged paths agree") {
-    // spark.graft.scan.fusedMaxLaneBytes = 0 declares every lane too
-    // big to stream through one task, forcing the staged path even for
-    // short lanes; the seed guard then splits it into the
-    // broadcast-seeded map (default) and the distributed rejoin (zero
-    // guard) — results must not depend on the routing
-    val CAP = "spark.graft.scan.fusedMaxLaneBytes"
+  test("fused, broadcast-seeded and broadcast-disabled scans agree") {
+    // the default routes these small lanes fused (interpolateNa:
+    // broadcast-seeded); a 1-byte advisory size sends the family to the
+    // broadcast-seeded map, and with broadcast disabled every op runs
+    // fused, interpolateNa as two fused scans — results must not depend
+    // on the routing
     val ops: Seq[XbeamDataset => XbeamDataset] = Seq(
       _.cumsum("time"), _.ffill("time"), _.bfill("time"),
       _.cummax("time"), _.cummin("time"), _.interpolateNa("time"),
@@ -79,52 +56,39 @@ class PrefixScanScaleSpec extends AnyFunSuite {
       _.ffill("time", limit = 3), _.bfill("time", limit = 2),
       _.interpolateNa("time", maxGap = 6.0))
     for (op <- ops) {
-      val fused = op(ds()).collectConsolidated()._2
-      def staged[A](body: => A): A =
-        try { spark.conf.set(CAP, "0"); body }
-        finally spark.conf.unset(CAP)
-      val bcast = staged(op(ds()).collectConsolidated()._2)
-      val dist = withDistributedSeeds(staged(op(ds()).collectConsolidated()._2))
-      for (v <- fused.vars.keys) {
-        assert(bcast.vars(v).arr.sameAs(fused.vars(v).arr),
-          s"broadcast-staged diverged on $v")
-        assert(dist.vars(v).arr.sameAs(fused.vars(v).arr),
-          s"distributed-staged diverged on $v")
+      val default = op(ds()).collectConsolidated()._2
+      val bcast = driverSeeded(op(ds()).collectConsolidated()._2)
+      val fused = noBroadcast(op(ds()).collectConsolidated()._2)
+      for (v <- default.vars.keys) {
+        assert(bcast.vars(v).arr.sameAs(default.vars(v).arr),
+          s"broadcast-seeded diverged on $v")
+        assert(fused.vars(v).arr.sameAs(default.vars(v).arr),
+          s"broadcast-disabled diverged on $v")
       }
     }
-  }
-
-  test("reverse two-level blocks follow the reverse scan direction") {
-    // bfill with a lane long enough that block boundaries sit mid-gap
-    val seq = withThreshold(1000)(
-      ds(time = 90, chunks = Map("time" -> 3, "x" -> 4))
-        .bfill("time").collectConsolidated()._2)
-    val two = withDistributedSeeds(withThreshold(5)(
-      ds(time = 90, chunks = Map("time" -> 3, "x" -> 4))
-        .bfill("time").collectConsolidated()._2))
-    assert(two.vars("v").arr.sameAs(seq.vars("v").arr))
   }
 
   test("a 10k-chunk pancake lane scans with one resident sliver per task") {
     // 10,000 chunks along time (chunk=1, the degenerate pancake): the
     // old flatMapGroups path buffered all 10k slivers in ONE task; the
-    // streaming fold holds one. Default threshold (64) routes this
-    // through the two-level path. Values are integer so the cumsum is
-    // exact; verify against a driver-side running sum.
+    // fused route streams one chunk and one sliver through the sort,
+    // and the driver-seeded route folds 80 KB of seeds on the driver
+    // and maps each chunk on its own. Values are integer so the cumsum
+    // is exact; verify both against a driver-side running sum.
     val n = 10000
     val vals = Array.tabulate(n)(i => ((i * 31) % 101).toDouble)
     val xds = XbeamDataset.fromLocal(spark,
       Map("v" -> (Seq("time"), NdArray.fromDoubles(DType.F64, Array(n), vals))),
       chunks = Map("time" -> 1))
-    // zero seed guard: this test exists to prove the DISTRIBUTED
-    // two-level engine streams (the default guard would broadcast
-    // these 80 KB of seeds and never touch it)
-    val got = withDistributedSeeds(
-      xds.cumsum("time").collectConsolidated()._2.vars("v").arr)
     val expect = new Array[Double](n)
     var acc = 0.0
     var i = 0
     while (i < n) { acc += vals(i); expect(i) = acc; i += 1 }
-    assert(got.sameAs(NdArray.fromDoubles(DType.F64, Array(n), expect)))
+    val want = NdArray.fromDoubles(DType.F64, Array(n), expect)
+    val fused = xds.cumsum("time").collectConsolidated()._2.vars("v").arr
+    assert(fused.sameAs(want), "fused route")
+    val seeded = driverSeeded(
+      xds.cumsum("time").collectConsolidated()._2.vars("v").arr)
+    assert(seeded.sameAs(want), "driver-seeded route")
   }
 }

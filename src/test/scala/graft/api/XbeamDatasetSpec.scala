@@ -19,6 +19,15 @@ class XbeamDatasetSpec extends AnyFunSuite {
   def era5ds(chunks: Map[String, Int] = Map("time" -> 4)) =
     XbeamDataset.fromLocal(spark, Fixtures.era5(), chunks = chunks)
 
+  private def exchanges(ds: XbeamDataset): Int =
+    "(?<!Reused)Exchange".r
+      .findAllIn(ds.chunkDataset.queryExecution.executedPlan.toString).size
+
+  /** Run `body` under a 1-byte advisory partition size: no lane fits
+    * it, so the lane scans take their driver-seeded route. */
+  private def withDriverSeeds[A](body: => A): A =
+    TestSpark.withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1")(body)
+
   test("scan enumerates the chunk grid and values round-trip") {
     val xds = era5ds()
     val pairs = xds.chunkDataset.collect()
@@ -891,23 +900,21 @@ class XbeamDatasetSpec extends AnyFunSuite {
       Seq(3.0, 2.0, 3.0, 2.0, 3.5))
     // Integer-valued data + dyadic α on a ≤40 lane keeps every step an
     // exactly-representable dyadic, so distributed == single-array
-    // kernel BIT-EXACTLY across chunkings and both scan paths — the
-    // property the x59 oracle gate leans on. (Fractional data may
-    // differ by affine-seam reassociation ULPs, like the two-level
-    // cumsum; checked with a tolerance below.)
+    // kernel BIT-EXACTLY on both scan routes — the property the x59
+    // oracle gate leans on. (Fractional data may differ by affine-seam
+    // reassociation ULPs; checked with a tolerance below.)
     val grid = NdArray.fromDoubles(DType.F64, Array(32, 6),
       Array.tabulate(192)(i => ((i * 37) % 11).toDouble))
     val direct = grid.ewmAlong(0, 0.5, None)
     def build = XbeamDataset.fromLocal(spark,
       Map("v" -> (Seq("t", "x"), grid)), chunks = Map("t" -> 8))
-    def check(): Unit = {
-      val got = build.ewm("t", 0.5).collectConsolidated()._2.vars("v").arr
-      assert(got.sameAs(direct))
+    def check(expectExchanges: Int): Unit = {
+      val out = build.ewm("t", 0.5)
+      assert(exchanges(out) == expectExchanges)
+      assert(out.collectConsolidated()._2.vars("v").arr.sameAs(direct))
     }
-    check()
-    spark.conf.set("spark.graft.scan.longLaneThreshold", "1")
-    try check()
-    finally spark.conf.unset("spark.graft.scan.longLaneThreshold")
+    check(1) // fused lane scan
+    withDriverSeeds(check(0))
     // fractional data: equal to the sequential recurrence within
     // reassociation ULPs
     val dirEra = Fixtures.era5()("temperature")._2.ewmAlong(0, 0.5, None)
@@ -1246,15 +1253,15 @@ class XbeamDatasetSpec extends AnyFunSuite {
     val direct = grid.cumprodAlong(0, None)
     def build(ch: Int) = XbeamDataset.fromLocal(spark,
       Map("v" -> (Seq("t", "x"), grid)), chunks = Map("t" -> ch))
-    def check(): Unit =
+    def check(expectExchanges: Int): Unit =
       for (ch <- Seq(5, 8, 16)) { // 5: non-dividing chunk edge
-        val got = build(ch).cumprod("t").collectConsolidated()._2.vars("v").arr
-        assert(got.sameAs(direct), s"chunks=$ch")
+        val out = build(ch).cumprod("t")
+        assert(exchanges(out) == expectExchanges, s"chunks=$ch")
+        assert(out.collectConsolidated()._2.vars("v").arr.sameAs(direct),
+          s"chunks=$ch")
       }
-    check()
-    spark.conf.set("spark.graft.scan.longLaneThreshold", "1")
-    try check()
-    finally spark.conf.unset("spark.graft.scan.longLaneThreshold")
+    check(1) // fused lane scan
+    withDriverSeeds(check(0))
     // NaN poisons the running product
     val nan = NdArray.fromDoubles(DType.F64, Array(3),
       Array(2.0, Double.NaN, 3.0))
@@ -1280,8 +1287,8 @@ class XbeamDatasetSpec extends AnyFunSuite {
   }
 
   test("cumminmax fused scan equals separate cummin/cummax on both paths") {
-    val orig = Fixtures.era5()("temperature")._2
-    def check(ds: XbeamDataset): Unit = {
+    def check(ds: XbeamDataset, expectExchanges: Int = 1): Unit = {
+      assert(exchanges(ds.cumminmax("time")) == expectExchanges)
       val fused = ds.cumminmax("time").collectConsolidated()._2
       val cmin = ds.cummin("time").collectConsolidated()._2
       val cmax = ds.cummax("time").collectConsolidated()._2
@@ -1293,10 +1300,7 @@ class XbeamDatasetSpec extends AnyFunSuite {
       assert(fused.vars("precip_cmax").arr.sameAs(cmax.vars("precip").arr))
     }
     check(era5ds(Map("time" -> 4))) // short lanes: fused single shuffle
-    // force the staged two-level path
-    spark.conf.set("spark.graft.scan.longLaneThreshold", "1")
-    try check(era5ds(Map("time" -> 4)))
-    finally spark.conf.unset("spark.graft.scan.longLaneThreshold")
+    withDriverSeeds(check(era5ds(Map("time" -> 4)), expectExchanges = 0))
     // NaNs poison the running extremes identically on both shapes
     val masked = era5ds(Map("time" -> 4)).mapBlocks(c => c.mapVars { (_, va) =>
       VarArray(va.dims, va.arr.mapF64(v => if (v % 7 == 0) Double.NaN else v))

@@ -3,7 +3,6 @@ package graft.api
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.core.ArrayChunk
 import graft.ndarray.{DType, NdArray}
 
 /** Fault injection for the idempotent-write contract (SURVEY §9): the

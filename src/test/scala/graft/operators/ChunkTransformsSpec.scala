@@ -60,7 +60,6 @@ class ChunkTransformsSpec extends AnyFunSuite {
       .collect().sortBy(_._1.offsets("group"))
     assert(out.length == 2)
     val evens = Seq(0, 2, 4)
-    val odds = Seq(1, 3, 5)
     val g0 = out(0)._2.vars("v").arr.toDoubles
     val g1 = out(1)._2.vars("v").arr.toDoubles
     assert(g0(0) == evens.map(_.toDouble).sum / 3)

@@ -25,10 +25,6 @@ import graft.TestSpark
 class EventsLoaderSpec extends AnyFunSpec with Matchers {
   private lazy val spark = TestSpark.spark
 
-  // 2026-08-13T12:34:56.789Z in micros since epoch
-  private val utcMicros = 1786624496789000L / 1000 * 1000 // keep µs exact
-  private val isoUtc = "2026-08-13"
-
   private def tmp(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"events_$tag")
     d.toFile.deleteOnExit()

@@ -150,18 +150,20 @@ class PlanShapeSpec extends AnyFunSuite {
   test("broadcast-seeded staged scans add no exchange at all") {
     import graft.api.XbeamDataset
     import graft.Fixtures
-    // force the staged path (fused lanes declared too big), keep the
-    // default seed guard: the prefix seeds collect + broadcast, so the
-    // chunk plan is a narrow map over the source — zero shuffles (the
-    // sliver collect runs as its own tiny job at plan time)
+    import graft.TestSpark.withConf
+    // a 1-byte advisory size: no lane fits one task, and the default
+    // broadcast bound takes the seeds, so the prefix seeds collect +
+    // broadcast and the chunk plan is a narrow map over the source —
+    // zero shuffles (the sliver collect runs as its own tiny job at
+    // plan time)
     def xds = XbeamDataset.fromLocal(spark, Fixtures.era5(),
       chunks = Map("time" -> 4))
     def exchanges(ds: graft.api.XbeamDataset): Int =
       "(?<!Reused)Exchange".r
         .findAllIn(ds.chunkDataset.queryExecution.executedPlan.toString).size
-    val CAP = "spark.graft.scan.fusedMaxLaneBytes"
-    try {
-      spark.conf.set(CAP, "0")
+    val ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val BROADCAST = "spark.sql.autoBroadcastJoinThreshold"
+    withConf(ADVISORY -> "1") {
       assert(exchanges(xds.cumsum("time")) == 0,
         "broadcast-staged cumsum must not shuffle chunk bodies")
       assert(exchanges(xds.ffill("time", limit = 2)) == 0,
@@ -174,7 +176,15 @@ class PlanShapeSpec extends AnyFunSuite {
         "broadcast-staged cumprod must not shuffle chunk bodies")
       assert(exchanges(xds.interpolateNa("time")) == 0,
         "broadcast-staged interpolate_na must not shuffle chunk bodies")
-    } finally spark.conf.unset(CAP)
+    }
+    // broadcast disabled: seeds may not be broadcast, so the scans run
+    // fused — one shuffle, and interpolateNa's two fused scans two
+    withConf(ADVISORY -> "1", BROADCAST -> "-1") {
+      assert(exchanges(xds.cumsum("time")) == 1,
+        "cumsum without broadcast must run one fused scan")
+      assert(exchanges(xds.interpolateNa("time")) == 2,
+        "interpolate_na without broadcast must run two fused scans")
+    }
   }
 
   test("corr/cov/dot/weighted reductions shuffle partials exactly once") {

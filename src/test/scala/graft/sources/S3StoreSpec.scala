@@ -1,9 +1,5 @@
 package graft.sources
 
-import java.net.URLDecoder
-import java.nio.charset.StandardCharsets.UTF_8
-
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Fixtures.arange

@@ -456,7 +456,6 @@ class ZarrDataSourceSpec extends AnyFunSuite {
     // effect: joined WITHOUT a broadcast hint, the small zarr side is
     // auto-broadcast (a stats-less DSv2 relation would report
     // defaultSizeInBytes and force a sort-merge join)
-    import spark.implicits._
     val big = spark.range(0, 1000000).selectExpr("id % 12 AS time", "id AS k")
     val joined = big.join(spark.read.format("zarr").load(dir), Seq("time"))
     joined.collect()

@@ -80,7 +80,6 @@ class ZarrStatsSpec extends AnyFunSuite {
   }
 
   test("rebuildStats restores pruning after a tombstoning append") {
-    import graft.Fixtures.arange
     val dir = statsStore()
     // v < 16 touches only the first of 6 chunks when stats are live
     assert(planned(dir, LessThan("v", 16.0)) == 1)

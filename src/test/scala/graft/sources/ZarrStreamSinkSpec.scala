@@ -151,7 +151,6 @@ class ZarrStreamSinkSpec extends AnyFunSuite {
   }
 
   test("float/int stream columns write exact values; narrow stores reject") {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     import graft.api.XbeamDataset
     import graft.core.{Template, VarSpec}

@@ -17,7 +17,6 @@ class ZarrWriteSpec extends AnyFunSuite {
     Files.createTempDirectory("zarr_write").toString + "/store"
 
   private def grid(n: Int, w: Int) = {
-    import spark.implicits._
     spark.range(n.toLong * w).select(
       (col("id") / w).cast("long").as("t"),
       (col("id") % w).cast("long").as("x"),
@@ -65,7 +64,6 @@ class ZarrWriteSpec extends AnyFunSuite {
       .option("dims", "t,x").option("chunks", "t=4").save(path)
     Zarr.extendDim(path, "t", 12)
     // the appended slab carries its GLOBAL t indices
-    import spark.implicits._
     val tail = spark.range(8L * 4, 12L * 4).select(
       (col("id") / 4).cast("long").as("t"),
       (col("id") % 4).cast("long").as("x"),
